@@ -270,3 +270,53 @@ def test_pixel_agg_commands_flow_through_statsd_flush(spark, catalog):
         assert all(x["t"] == 60 for x in r.values())
     finally:
         server.shutdown()
+
+
+def test_http_500_body_is_json_when_message_has_quotes(catalog):
+    """An evaluation error becomes a 500 whose body parses as JSON,
+    even when the message carries both quote characters (a Python
+    repr of it would not be JSON)."""
+    from urllib.error import HTTPError
+    from urllib.parse import quote
+    from urllib.request import urlopen
+
+    from tgres_spark.http_api import serve
+
+    server = serve(catalog, now=300)
+    try:
+        host, port = server.server_address
+        target = quote("""scale(web.*.hits,"it's")""")
+        with pytest.raises(HTTPError) as err:
+            urlopen(f"http://{host}:{port}/render?target={target}", timeout=60)
+        assert err.value.code == 500
+        msg = json.loads(err.value.read())["error"]
+        assert "it's" in msg and '"' in msg
+    finally:
+        server.shutdown()
+
+
+def test_as_percent_over_unprojected_partitioned_archive(spark, tmp_path):
+    """A partitioned archive frame carries ``day`` and ``bucket`` beside
+    ``name, t, value``; the DSL fetch must project them away so a
+    fetched series and an aggregate of fetched series union cleanly."""
+    from tgres_spark.archive import materialize_archives
+    from tgres_spark.render import render_json
+
+    rows = [
+        (f"srv.{h}.cpu.{m}", t, v)
+        for h in ("h1", "h2")
+        for m, v in (("user", 30.0), ("sys", 70.0))
+        for t in range(60, 600, 60)
+    ]
+    sf = spark.createDataFrame(rows, "name string, t long, value double")
+    arc = materialize_archives(
+        spark, sf, [("avg", 60)], str(tmp_path / "arc"), partitioned=True,
+        n_buckets=4,
+    )
+    catalog = arc.archives[1].df
+    assert {"day", "bucket"} <= set(catalog.columns)
+    target = ["asPercent(srv.h1*.cpu.user,sumSeries(srv.h1*.cpu.*))"]
+    body = render_json(catalog, target)
+    assert body == render_json(catalog.select("name", "t", "value"), target)
+    out = json.loads(body)
+    assert out and all(len(s["datapoints"]) == 9 for s in out)

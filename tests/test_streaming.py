@@ -3,11 +3,15 @@
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from tgres_spark.operators.consolidate import consolidate
 from tgres_spark.sources.graphite import parse_graphite_lines
+from tgres_spark.streaming import CHECKPOINT_FILE_MANAGER_CONF
 from tgres_spark.streaming.ingest import run_file_pipeline
 
 
@@ -1443,3 +1447,106 @@ def test_semdedup_increment_stream_dedups_through_the_index(spark, tmp_path):
     # the index now holds corpus + both batches
     n_idx = spark.read.parquet(*sorted(glob.glob(f"{work}/idx/g*"))).count()
     assert n_idx == 6
+
+
+def _checkpoint_manager_class(spark, path) -> str:
+    """The CheckpointFileManager Spark would pick for ``path`` under the
+    session's current confs."""
+    jvm = spark._jvm
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return mgr.create(jvm.org.apache.hadoop.fs.Path(str(path)), conf).getClass().getName()
+
+
+def _drop_two_files(in_dir):
+    """Leg 1 leaves m.two's (1020,1080] slot open in state; leg 2 adds
+    its second point and a sentinel that closes it."""
+    in_dir.mkdir()
+    (in_dir / "a.txt").write_text(
+        "m.one 1.0 1000\nm.one 3.0 1010\nm.two 2.0 1030\nzz.s 0.0 1045\n"
+    )
+    return lambda: (in_dir / "b.txt").write_text("m.two 4.0 1070\nzz.s 0.0 6000\n")
+
+
+def _rows(spark, out_dir):
+    return sorted(tuple(r) for r in spark.read.parquet(str(out_dir)).collect())
+
+
+def test_streaming_uses_filesystem_checkpoint_manager(spark, tmp_path):
+    """A library pipeline switches its session to the FileSystem-based
+    checkpoint manager, which forks no ``readlink`` per rename."""
+    spark.conf.unset(CHECKPOINT_FILE_MANAGER_CONF)
+    ckpt = tmp_path / "ck"
+    assert _checkpoint_manager_class(spark, ckpt).endswith(
+        "FileContextBasedCheckpointFileManager"
+    )
+    _drop_two_files(tmp_path / "in")
+    run_file_pipeline(spark, str(tmp_path / "in"), str(tmp_path / "out"), str(ckpt),
+                      step_s=60, watermark_s=10)
+    assert _checkpoint_manager_class(spark, ckpt).endswith(
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+
+def test_resume_from_file_context_checkpoint(spark, tmp_path):
+    """A checkpoint the default (FileContext) manager wrote resumes
+    through the library's manager: offsets, the file-source log and the
+    window state all carry over, so the sink equals one uninterrupted
+    run over both files."""
+    from tgres_spark.streaming.ingest import read_graphite_stream, streaming_consolidate
+
+    in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ck"
+    drop_second = _drop_two_files(in_dir)
+    spark.conf.unset(CHECKPOINT_FILE_MANAGER_CONF)
+    assert _checkpoint_manager_class(spark, ckpt).endswith(
+        "FileContextBasedCheckpointFileManager"
+    )
+    rolled = streaming_consolidate(
+        read_graphite_stream(spark, str(in_dir)), step_s=60, watermark_s=10
+    )
+    (
+        rolled.writeStream.format("parquet")
+        .option("path", str(out_dir))
+        .option("checkpointLocation", str(ckpt))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    assert _rows(spark, out_dir) == [("m.one", 1020, 2.0)]
+    drop_second()
+    run_file_pipeline(spark, str(in_dir), str(out_dir), str(ckpt), step_s=60, watermark_s=10)
+
+    whole = tmp_path / "whole"
+    run_file_pipeline(spark, str(in_dir), str(whole), str(tmp_path / "ck_whole"),
+                      step_s=60, watermark_s=10)
+    assert _rows(spark, out_dir) == _rows(spark, whole)
+    assert ("m.two", 1080, 3.0) in _rows(spark, out_dir)
+
+
+def test_corrupt_offsets_file_fails_restart(spark, tmp_path):
+    """Hadoop .crc verification survives the manager switch: one flipped
+    byte in the latest committed offsets file stops the restart with a
+    checksum error instead of a silent resume."""
+    in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ck"
+    drop_second = _drop_two_files(in_dir)
+    run_file_pipeline(spark, str(in_dir), str(out_dir), str(ckpt), step_s=60, watermark_s=10)
+    offsets = ckpt / "offsets"
+    latest = offsets / str(max(int(n) for n in os.listdir(offsets) if n.isdigit()))
+    data = bytearray(latest.read_bytes())
+    data[-2] ^= 0x01
+    latest.write_bytes(bytes(data))
+    drop_second()
+    with pytest.raises(StreamingQueryException, match="Checksum error"):
+        run_file_pipeline(
+            spark, str(in_dir), str(out_dir), str(ckpt), step_s=60, watermark_s=10
+        )
+
+
+def test_streams_start_only_through_run_available_now():
+    """Every streaming query in the package starts through the one
+    helper that sets the checkpoint manager; a hand-rolled chain would
+    silently fall back to the default manager."""
+    pkg = Path(__file__).resolve().parent.parent / "tgres_spark"
+    hits = {str(p.relative_to(pkg)): p.read_text().count("writeStream") for p in pkg.rglob("*.py")}
+    assert {f: n for f, n in hits.items() if n} == {"streaming/__init__.py": 1}

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..model import NAME, T
+from ..model import NAME, T, VALUE
 from ..operators import dsl_calculate as dc
 from ..operators import dsl_combine as db
 from ..operators import dsl_filter as df_
@@ -65,7 +65,7 @@ class DslContext:
             span = self.t_to - self.t_from
             step = max(1, span // self.max_points)
             df = consolidate(df, int(step), cf="avg")
-        return df
+        return df.select(NAME, T, VALUE)
 
 
 def _series(ctx, node):

@@ -13,6 +13,7 @@ two calls behind any WSGI/ASGI front.
 from __future__ import annotations
 
 import http.server
+import json
 import logging
 import re
 import threading
@@ -172,7 +173,7 @@ def _make_handler(catalog: DataFrame, now: int | None):
                     self._reply(404, '{"error": "not found"}')
             except Exception as e:  # evaluation error → 500, not a hang
                 _LOG.warning("request %s failed: %s", self.path, e)
-                self._reply(500, '{"error": %s}' % repr(str(e)))
+                self._reply(500, json.dumps({"error": str(e)}))
 
     return Handler
 

@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from . import run_available_now
+
 _OUT_SCHEMA = StructType(
     [
         StructField("name", StringType()),
@@ -126,12 +128,4 @@ def run_anomaly_stream(
         reader = reader.option("maxFilesPerTrigger", files_per_trigger)
     src = reader.parquet(in_dir)
     scored = streaming_anomaly(src, points=points, k=k)
-    q = (
-        scored.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(scored, checkpoint, path=out_dir)

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..model import NAME, T
+from . import run_available_now
 
 _MANIFEST_DIR = "manifest"
 
@@ -199,15 +200,11 @@ def run_catalog_pipeline(
     from .ingest import read_graphite_stream
 
     parsed = read_graphite_stream(spark, in_path, max_files_per_trigger)
-    q = (
-        parsed.writeStream.foreachBatch(
-            lambda df, bid: merge_catalog_batch(df, bid, catalog_dir)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        parsed,
+        checkpoint,
+        foreach_batch=lambda df, bid: merge_catalog_batch(df, bid, catalog_dir),
     )
-    q.awaitTermination()
 
 
 def _merge_two(base: DataFrame | None, nxt: DataFrame) -> DataFrame:

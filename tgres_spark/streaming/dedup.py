@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import run_available_now
+
 
 def streaming_dedup_keepers(docs: DataFrame) -> DataFrame:
     """The streaming aggregation: (h, n_dups, keeper_id) per distinct
@@ -59,14 +61,9 @@ def run_dedup_stream(
     def sink(bdf: DataFrame, batch_id: int) -> None:
         bdf.write.mode("overwrite").parquet(out_dir)
 
-    q = (
-        kept.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        kept, checkpoint, foreach_batch=sink, output_mode="complete"
     )
-    q.awaitTermination()
 
 
 def run_dedup_stream_updates(
@@ -98,11 +95,6 @@ def run_dedup_stream_updates(
             "append"
         ).parquet(out_dir)
 
-    q = (
-        kept.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        kept, checkpoint, foreach_batch=sink, output_mode="update"
     )
-    q.awaitTermination()

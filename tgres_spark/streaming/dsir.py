@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import run_available_now
+
 
 def run_dsir_stream(
     spark: SparkSession,
@@ -31,12 +33,4 @@ def run_dsir_stream(
 
     src = spark.readStream.schema(schema).parquet(in_dir)
     out = dsir_score_stream(src, model_row)
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(out, checkpoint, path=out_dir)

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..model import micro6
+from . import run_available_now
 
 
 def enrich_window_agg(
@@ -74,15 +75,7 @@ def run_enrich_stream(
 ) -> None:
     src = spark.readStream.schema(schema).parquet(in_dir)
     out = enrich_window_agg(src, dim, step_s=step_s, watermark_s=watermark_s)
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(out, checkpoint, path=out_dir)
 
 
 def run_asof_stream(
@@ -122,10 +115,4 @@ def run_asof_stream(
         out = asof_backward(bdf, right, on, t, left_cols, right_cols)
         out.write.mode("append").parquet(out_dir)
 
-    q = (
-        src.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(src, checkpoint, foreach_batch=sink)

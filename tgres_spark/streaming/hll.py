@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.sketch import hll_registers
+from . import run_available_now
 
 
 def run_hll_stream(
@@ -43,14 +44,9 @@ def run_hll_stream(
     def sink(bdf: DataFrame, batch_id: int) -> None:
         bdf.write.mode("overwrite").parquet(out_dir)
 
-    q = (
-        regs.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        regs, checkpoint, foreach_batch=sink, output_mode="complete"
     )
-    q.awaitTermination()
 
 
 def run_histogram_stream(
@@ -81,14 +77,9 @@ def run_histogram_stream(
     def sink(bdf: DataFrame, batch_id: int) -> None:
         bdf.write.mode("overwrite").parquet(out_dir)
 
-    q = (
-        hist.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        hist, checkpoint, foreach_batch=sink, output_mode="complete"
     )
-    q.awaitTermination()
 
 
 def run_cms_stream(
@@ -116,14 +107,9 @@ def run_cms_stream(
     def sink(bdf: DataFrame, batch_id: int) -> None:
         bdf.write.mode("overwrite").parquet(out_dir)
 
-    q = (
-        sk.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        sk, checkpoint, foreach_batch=sink, output_mode="complete"
     )
-    q.awaitTermination()
 
 
 def run_bloom_stream(
@@ -155,11 +141,6 @@ def run_bloom_stream(
     def sink(bdf: DataFrame, batch_id: int) -> None:
         bdf.write.mode("overwrite").parquet(out_dir)
 
-    q = (
-        sk.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        sk, checkpoint, foreach_batch=sink, output_mode="complete"
     )
-    q.awaitTermination()

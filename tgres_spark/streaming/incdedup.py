@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from . import run_available_now
+
 
 def run_incdedup_stream(
     spark: SparkSession,
@@ -44,13 +46,7 @@ def run_incdedup_stream(
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(in_dir)
     )
-    q = (
-        src.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(src, checkpoint, foreach_batch=_score)
 
 
 def run_index_update_stream(
@@ -90,13 +86,7 @@ def run_index_update_stream(
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(in_dir)
     )
-    q = (
-        src.writeStream.foreachBatch(_update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(src, checkpoint, foreach_batch=_update)
 
 
 def run_prep_increment_stream(
@@ -223,13 +213,7 @@ def run_prep_increment_stream(
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(in_dir)
     )
-    q = (
-        src.writeStream.foreachBatch(_prep)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(src, checkpoint, foreach_batch=_prep)
 
 
 def run_semdedup_increment_stream(
@@ -360,10 +344,4 @@ def run_semdedup_increment_stream(
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(in_dir)
     )
-    q = (
-        src.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(src, checkpoint, foreach_batch=_score)

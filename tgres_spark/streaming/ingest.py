@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..model import NAME, T, VALUE, micro6
 from ..sources.graphite import parse_graphite_lines
 from ..sources.statsd import parse_statsd_packets
+from . import run_available_now
 
 
 def read_graphite_stream(
@@ -128,15 +129,7 @@ def run_file_pipeline(
     """
     parsed = read_graphite_stream(spark, in_path)
     rolled = streaming_consolidate(parsed, step_s=step_s, watermark_s=watermark_s)
-    q = (
-        rolled.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(rolled, checkpoint, path=out_path)
 
 
 def run_statsd_file_pipeline(
@@ -172,15 +165,7 @@ def run_statsd_file_pipeline(
             F.col(VALUE).cast("double"),
         )
     )
-    q = (
-        rate.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(rate, checkpoint, path=out_path)
 
 
 def run_statsd_timers_pipeline(
@@ -216,15 +201,7 @@ def run_statsd_timers_pipeline(
         )
     )
     stats = timer_stats_from_sorted(grouped, "stats")
-    q = (
-        stats.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stats, checkpoint, path=out_path)
 
 
 def run_statsd_gauges_pipeline(
@@ -270,15 +247,7 @@ def run_statsd_gauges_pipeline(
             ).cast("double").alias(VALUE),
         )
     )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(agg, checkpoint, path=out_path)
 
 
 def run_pixel_counter_pipeline(
@@ -315,12 +284,4 @@ def run_pixel_counter_pipeline(
             ),
         )
     )
-    q = (
-        rate.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(rate, checkpoint, path=out_path)

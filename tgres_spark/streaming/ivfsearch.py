@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import run_available_now
+
 
 def run_ivf_search_stream(
     spark: SparkSession,
@@ -57,10 +59,4 @@ def run_ivf_search_stream(
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(in_dir)
     )
-    q = (
-        src.writeStream.foreachBatch(_search)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(src, checkpoint, foreach_batch=_search)

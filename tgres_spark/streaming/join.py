@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import run_available_now
+
 
 def interval_join(
     left: DataFrame,
@@ -73,12 +75,4 @@ def run_interval_join_stream(
     left = src.where(F.col("event_type") == "click").select("user_id", "t")
     right = src.where(F.col("event_type") == "purchase").select("user_id", "t")
     joined = interval_join(left, right, window_s=window_s, watermark_s=watermark_s)
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(joined, checkpoint, path=out_dir)

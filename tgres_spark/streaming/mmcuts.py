@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from . import run_available_now
+
 
 def run_scene_cut_stream(
     spark: SparkSession,
@@ -38,10 +40,4 @@ def run_scene_cut_stream(
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(in_dir)
     )
-    q = (
-        src.writeStream.foreachBatch(_cuts)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(src, checkpoint, foreach_batch=_cuts)

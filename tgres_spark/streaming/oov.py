@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import run_available_now
+
 
 def run_oov_stream(
     spark: SparkSession,
@@ -26,12 +28,4 @@ def run_oov_stream(
 
     src = spark.readStream.schema(schema).parquet(in_dir)
     out = oov_score_stream(src, vocab_row)
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(out, checkpoint, path=out_dir)

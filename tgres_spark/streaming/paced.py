@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as Tt
 
 from ..model import NAME, T, VALUE
+from . import run_available_now
 
 _OUT_SCHEMA = Tt.StructType(
     [
@@ -159,12 +160,4 @@ def run_paced_file_pipeline(
 
     parsed = read_graphite_stream(spark, in_path, max_files_per_trigger)
     paced = streaming_paced_metrics(parsed, pace_s=pace_s, kind=kind)
-    q = (
-        paced.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(paced, checkpoint, path=out_path)

@@ -22,6 +22,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import run_available_now
+
 
 def _raw_gens(spark: SparkSession, out_dir: str, kind: str) -> list[int]:
     """Committed generations under ``out_dir/<kind>``: numbered b*
@@ -151,13 +153,7 @@ def run_cumulative_refresh(
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(in_dir)
     )
-    q = (
-        src.writeStream.foreachBatch(_refresh)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(src, checkpoint, foreach_batch=_refresh)
 
 
 def read_latest_snapshot(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -279,13 +275,7 @@ def run_delta_refresh(
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(in_dir)
     )
-    q = (
-        src.writeStream.foreachBatch(_refresh)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(src, checkpoint, foreach_batch=_refresh)
 
 
 # --- frozen-generation pack refresh (round 12) --------------------------------
@@ -353,13 +343,7 @@ def run_generation_pack(
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(in_dir)
     )
-    q = (
-        src.writeStream.foreachBatch(_refresh)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(src, checkpoint, foreach_batch=_refresh)
 
 
 def read_generations(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import run_available_now
+
 
 def streaming_sessions(
     events: DataFrame, gap_s: int = 1800, watermark_s: int = 60
@@ -74,12 +76,4 @@ def run_sessionize_stream(
         reader = reader.option("maxFilesPerTrigger", files_per_trigger)
     events = reader.parquet(in_dir)
     sessions = streaming_sessions(events, gap_s=gap_s, watermark_s=watermark_s)
-    q = (
-        sessions.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(sessions, checkpoint, path=out_dir)
