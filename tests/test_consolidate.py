@@ -8,7 +8,9 @@ from __future__ import annotations
 
 import math
 
-from tgres_spark.operators.consolidate import consolidate
+import pytest
+
+from tgres_spark.operators.consolidate import CFS, consolidate
 
 
 def mk(spark, rows):
@@ -124,3 +126,58 @@ def test_salted_consolidate_equals_plain(spark):
         salted = {(r["name"], r["t"]): r["value"]
                   for r in consolidate_salted(sf, 60, cf=cf, n_salts=8, heartbeat=30).collect()}
         assert salted == plain, cf
+
+
+def _gappy_series(spark):
+    """Three series with unique (name, t) — tie order in a lag pass is
+    engine-dependent — gaps around the 300s step and the 600s
+    heartbeat, and a few NULL values."""
+    import random
+
+    rng = random.Random(5)
+    rows = []
+    for name in ("a", "b", "c"):
+        t = 1000
+        for _ in range(120):
+            t += rng.choice([1, 7, 30, 59, 60, 61, 299, 300, 601, 900])
+            v = None if rng.random() < 0.08 else round(rng.uniform(-500, 500), 3)
+            rows.append((name, t, v))
+    return rows
+
+
+@pytest.mark.parametrize("heartbeat", [None, 600])
+@pytest.mark.parametrize("xff", [0.0, 0.5])
+@pytest.mark.parametrize("cf", CFS)
+def test_consolidate_variants_match_oracle(spark, cf, xff, heartbeat):
+    """Every CF × xff × heartbeat: consolidate() equals the DuckDB
+    oracle_consolidate_sql exactly, each consolidate_multi archive
+    equals consolidate(), and so does consolidate_salted (no `last`,
+    no xff)."""
+    import duckdb
+
+    from tgres_spark.operators.consolidate import (
+        consolidate_multi,
+        consolidate_salted,
+        oracle_consolidate_sql,
+        release_multi_cache,
+    )
+
+    rows = _gappy_series(spark)
+    sf = mk(spark, rows)
+    got = as_map(consolidate(sf, 300, cf=cf, xff=xff, heartbeat=heartbeat))
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE s (name VARCHAR, t BIGINT, value DOUBLE)")
+    con.executemany("INSERT INTO s VALUES (?, ?, ?)", rows)
+    sql = oracle_consolidate_sql("SELECT * FROM s", 300, cf, xff, heartbeat)
+    expect = {(n, t): v for n, t, v in con.execute(sql).fetchall()}
+    con.close()
+    assert got == expect
+
+    multi = consolidate_multi(sf, [(cf, 300, xff)], heartbeat=heartbeat)
+    archive = {(n.split("/", 1)[1], t): v for (n, t), v in as_map(multi).items()}
+    release_multi_cache()
+    assert archive == got
+    if cf != "last" and not xff:  # consolidate_salted takes no xff
+        salted = consolidate_salted(sf, 300, cf=cf, n_salts=4, heartbeat=heartbeat)
+        assert as_map(salted) == got

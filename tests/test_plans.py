@@ -125,6 +125,22 @@ def test_deterministic_sums_stay_integer(spark, qs):
         assert "decimal(38,6)" not in p.lower().replace(" ", ""), key
 
 
+def test_statsd_gauge_flush_is_one_aggregate(spark, qs):
+    """The gauge flush is one aggregate per (window, name): the last
+    set value is max(struct(t, v)), so the executed plan has no Window
+    and no Join, and the batch plan carries no streaming watermark."""
+    import re
+
+    df = qs["statsd_flush_gauges"](spark, SF)
+    df.collect()
+    qe = df._jdf.queryExecution()
+    p = qe.executedPlan().toString()
+    spark.catalog.clearCache()
+    assert not re.search(r"\bWindow\b", p), p
+    assert "Join" not in p, p
+    assert "EventTimeWatermark" not in qe.optimizedPlan().toString()
+
+
 def test_multi_rra_shares_one_duration_pass(spark, qs):
     """rrd_multi_rra: ONE window/lag pass feeds every archive (the
     reference's single PDP stream updating all RRAs) — the persisted

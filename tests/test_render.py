@@ -249,10 +249,8 @@ def test_pixel_agg_commands_flow_through_statsd_flush(spark, catalog):
         ):
             with urlopen(f"http://{host}:{port}{path}", timeout=60) as r:
                 assert r.status == 200
-        # the handler responds BEFORE queueing (reference parity:
-        # pixel.go sends the gif first), so the last request's
-        # commands may still be in flight when urlopen returns —
-        # wait for all 6 (observed as a rare full-suite flake)
+        # the handler queues before it sends the pixel, so all 6 are
+        # in once the last urlopen returns; the wait is a guard only
         import time as _time
 
         deadline = _time.monotonic() + 30
@@ -268,6 +266,43 @@ def test_pixel_agg_commands_flow_through_statsd_flush(spark, catalog):
         assert r["stats.timers.lat.count"]["value"] == 2.0
         assert r["stats.timers.lat.mean"]["value"] == 20.0
         assert all(x["t"] == 60 for x in r.values())
+    finally:
+        server.shutdown()
+
+
+def test_full_pixel_queues_answer_503_and_queue_nothing(catalog, monkeypatch):
+    """Both pixel queues stop at http_api.QUEUE_CAP: a request whose
+    items do not fit gets a 503 with a JSON error body, and the queue
+    is left as it was — no partial queueing of a multi-pair request."""
+    from urllib.error import HTTPError
+    from urllib.request import urlopen
+
+    from tgres_spark import http_api
+
+    monkeypatch.setattr(http_api, "QUEUE_CAP", 2)
+    server = http_api.serve(catalog, now=300)
+    try:
+        host, port = server.server_address
+
+        def get(path):
+            try:
+                with urlopen(f"http://{host}:{port}{path}", timeout=60) as r:
+                    return r.status, r.read()
+            except HTTPError as e:
+                return e.code, e.read()
+
+        assert get("/pixel/app.a")[0] == 200
+        assert get("/pixel/app.b")[0] == 200
+        st, body = get("/pixel/app.c")
+        assert st == 503 and "queue full" in json.loads(body)["error"]
+        assert server.pixel_hits == [("app.a", 300), ("app.b", 300)]
+
+        assert get("/pixel/add?x=1")[0] == 200
+        st, body = get("/pixel/add?y=2&z=3")  # 1 + 2 > 2: none queued
+        assert st == 503 and "queue full" in json.loads(body)["error"]
+        assert get("/pixel/add?w=4")[0] == 200
+        assert server.agg_commands == [("add", "x", 1.0, 300), ("add", "w", 4.0, 300)]
+        assert get("/pixel/add?v=5")[0] == 503
     finally:
         server.shutdown()
 

@@ -83,7 +83,7 @@ def test_statsd_stream_matches_batch_counters(spark, tmp_path):
         flush_s=60, watermark_s=10,
     )
     got = {
-        (r["name"], r["t"]): round(r["value"], 9)
+        (r["name"], r["t"]): r["value"]
         for r in spark.read.parquet(str(tmp_path / "sout")).collect()
         if "zz" not in r["name"]
     }
@@ -93,11 +93,44 @@ def test_statsd_stream_matches_batch_counters(spark, tmp_path):
     )
     batch = statsd_flush(parse_statsd_packets(pk), 60)
     expect = {
-        (r["name"], r["t"]): round(r["value"], 9)
+        (r["name"], r["t"]): r["value"]
         for r in batch.collect()
         if r["name"].startswith("stats.c")
     }
     assert got == expect
+
+
+def test_statsd_stream_counters_sum_micro6_like_batch(spark, tmp_path):
+    """0.1 + 0.2 + 0.3 in one slot: a plain double sum gives
+    0.6000000000000001, the micro6 sum exactly 0.6. The stream runs the
+    batch counter flush, so the two agree with no rounding."""
+    from tgres_spark.aggregator import statsd_flush
+    from tgres_spark.sources.statsd import parse_statsd_packets
+    from tgres_spark.streaming.ingest import run_statsd_file_pipeline
+
+    in_dir = tmp_path / "xin"
+    in_dir.mkdir()
+    lines = ["10 c1:0.1|c", "20 c1:0.2|c", "30 c1:0.3|c", "200 zz:0|c"]
+    (in_dir / "p.txt").write_text("\n".join(lines) + "\n")
+    run_statsd_file_pipeline(
+        spark, str(in_dir), str(tmp_path / "xout"), str(tmp_path / "xck"),
+        flush_s=60, watermark_s=10,
+    )
+    got = {
+        (r["name"], r["t"]): r["value"]
+        for r in spark.read.parquet(str(tmp_path / "xout")).collect()
+        if "zz" not in r["name"]
+    }
+    pk = spark.createDataFrame(
+        [(int(x.split(" ", 1)[0]), x.split(" ", 1)[1]) for x in lines],
+        "t long, packet string",
+    )
+    expect = {
+        (r["name"], r["t"]): r["value"]
+        for r in statsd_flush(parse_statsd_packets(pk), 60).collect()
+        if r["name"] == "stats.c1"
+    }
+    assert got == expect == {("stats.c1", 60): 0.01}
 
 
 def test_paced_metrics_stream_matches_batch_sum(spark, tmp_path):
@@ -243,7 +276,7 @@ def test_statsd_timers_stream_matches_batch(spark, tmp_path):
         flush_s=60, watermark_s=10,
     )
     got = {
-        (r["name"], r["t"]): round(r["value"], 9)
+        (r["name"], r["t"]): r["value"]
         for r in spark.read.parquet(str(tmp_path / "tout")).collect()
         if ".zz." not in r["name"]
     }
@@ -253,7 +286,7 @@ def test_statsd_timers_stream_matches_batch(spark, tmp_path):
     )
     batch = statsd_flush(parse_statsd_packets(pk), 60)
     expect = {
-        (r["name"], r["t"]): round(r["value"], 9)
+        (r["name"], r["t"]): r["value"]
         for r in batch.collect()
         if r["name"].startswith("stats.timers.t") and ".zz." not in r["name"]
     }
@@ -430,7 +463,7 @@ def test_statsd_gauges_stream_matches_batch(spark, tmp_path):
         flush_s=60, watermark_s=10,
     )
     got = {
-        (r["name"], r["t"]): round(r["value"], 9)
+        (r["name"], r["t"]): r["value"]
         for r in spark.read.parquet(str(tmp_path / "gsout")).collect()
         if "zz" not in r["name"]
     }
@@ -439,7 +472,7 @@ def test_statsd_gauges_stream_matches_batch(spark, tmp_path):
         "t long, packet string",
     )
     expect = {
-        (r["name"], r["t"]): round(r["value"], 9)
+        (r["name"], r["t"]): r["value"]
         for r in statsd_flush(parse_statsd_packets(pk), 60).collect()
         if r["name"].startswith("stats.gauges") and "zz" not in r["name"]
     }
@@ -1550,3 +1583,35 @@ def test_streams_start_only_through_run_available_now():
     pkg = Path(__file__).resolve().parent.parent / "tgres_spark"
     hits = {str(p.relative_to(pkg)): p.read_text().count("writeStream") for p in pkg.rglob("*.py")}
     assert {f: n for f, n in hits.items() if n} == {"streaming/__init__.py": 1}
+
+
+def test_flush_window_is_built_only_in_flush_slots():
+    """The end-labeled flush window (watermark + window over t - 1) is
+    built in one place, aggregator.flush_slots; the statsd, pixel and
+    consolidation streams group through it, so batch and streaming
+    flushes cannot drift apart again. Likewise consolidate.py has one
+    lag-duration pass (_durations)."""
+    import ast
+
+    pkg = Path(__file__).resolve().parent.parent / "tgres_spark"
+
+    def calls(rel, attrs):
+        tree = ast.parse((pkg / rel).read_text())
+        return {
+            (rel, fn.name, node.func.attr)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef)
+            for node in ast.walk(fn)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in attrs
+        }
+
+    window = {"withWatermark", "window"}
+    assert calls("aggregator.py", window) | calls("streaming/ingest.py", window) == {
+        ("aggregator.py", "flush_slots", "withWatermark"),
+        ("aggregator.py", "flush_slots", "window"),
+    }
+    assert calls("operators/consolidate.py", {"lag"}) == {
+        ("operators/consolidate.py", "_durations", "lag"),
+    }

@@ -1,4 +1,4 @@
-"""Statsd-style flush aggregation over fixed windows.
+"""Statsd-style flush aggregation over fixed windows, batch and streaming.
 
 Reference: aggregator/aggregator.go Flush (aggregator.go:155-211) and
 statsd.go AggregatorCmd routing:
@@ -16,19 +16,26 @@ Deviation (documented): aggregator.go:185-187 fills ``cumul`` with
 ``cumul[n] += v`` on a fresh slice, so its ".sum" is really the max
 sample — a bug. We implement the statsd-standard cumulative sum.
 
-Spark shape: one groupBy (name, window) with conditional aggregates —
-single shuffle; timers build a sorted array and left-fold partial
-sums so both engines sum in the same order.
+Spark shape: one engine for batch and streaming. ``flush_slots``
+groups a parsed relation by (end-labeled flush window, name) under an
+event-time watermark; Catalyst drops the watermark from batch plans,
+so the family builders below are the batch ``statsd_flush`` queries
+and, over a ``readStream`` source, the ``streaming/ingest.py``
+pipelines (append mode emits a window once the watermark passes its
+end, i.e. with the same rows the batch window holds). Each family is
+one aggregate per (window, name) — one shuffle: counters and gauge
+deltas sum micro6 units, the last gauge set is max(struct(t, v)),
+timers keep one sorted sample list and left-fold partial sums so both
+engines sum in the same order.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, GroupedData
 from pyspark.sql import functions as F
 from .model import literal_df
 
 from .model import NAME, T, VALUE, micro6
-from .operators.consolidate import slot_end
 
 THRESHOLDS = (90,)  # reference default Thresholds: []int{90}
 
@@ -46,11 +53,10 @@ def statsd_flush(
     configured percentile, mirroring aggregator.State.Thresholds).
     """
     # fence the shared parse (optimization round 13, guide §7.2): the
-    # parsed relation feeds FOUR branches (counters, gauge sets, gauge
-    # deltas, timers) and each union branch re-evaluated the whole
-    # regex-parse projection from the packets scan; one cache pass
-    # computes it once. Both callers are batch queries (the streaming
-    # flush path has its own window engine in streaming/ingest.py).
+    # parsed relation feeds three family branches and each union
+    # branch re-evaluated the whole regex-parse projection from the
+    # packets scan; one cache pass computes it once. Batch only — a
+    # stream runs one family per query (streaming/ingest.py).
     parsed = parsed.persist()  # fence: returned plan reads this cache
     counters = _flush_counters(parsed, flush_s, prefix)
     gauges = _flush_gauges(parsed, flush_s, prefix)
@@ -58,20 +64,44 @@ def statsd_flush(
     return counters.unionAll(gauges).unionAll(timers)
 
 
-def _flush_counters(parsed: DataFrame, flush_s: int, prefix: str) -> DataFrame:
-    c = parsed.where(F.col("metric") == "c")
+def flush_slots(df: DataFrame, flush_s: int, watermark_s: int) -> GroupedData:
+    """Group ``df`` by (flush window, name) — the one place the flush
+    window is built. ``window_end()`` labels a group's slot; it equals
+    ``operators.consolidate.slot_end(flush_s)``.
+
+    Spark windows are [start, end) but slots are (start, end] (rra.go
+    movePdpToDps): event time t - 1 puts a boundary point in the same
+    end-labeled slot as batch ``slot_end``. The watermark bounds
+    streaming state and sets when append mode emits a window; batch
+    plans drop it."""
+    return (
+        df.withColumn("ts", (F.col(T) - 1).cast("timestamp"))
+        .withWatermark("ts", f"{watermark_s} seconds")
+        .groupBy(F.window("ts", f"{flush_s} seconds"), F.col(NAME))
+    )
+
+
+def window_end():
+    """Slot label of a ``flush_slots`` group: window end, epoch seconds."""
+    return F.unix_timestamp(F.col("window.end")).cast("bigint")
+
+
+def _flush_counters(
+    parsed: DataFrame, flush_s: int, prefix: str, watermark_s: int = 0
+) -> DataFrame:
     rate = (
         F.sum(micro6(F.col(VALUE) / F.col("sample"))).cast("double")
         / 1000000.0
         / float(flush_s)
     )
+    c = parsed.where(F.col("metric") == "c")
     return (
-        c.groupBy(F.col(NAME), slot_end(flush_s).alias("slot"))
-        .agg(rate.alias("v"))
+        flush_slots(c, flush_s, watermark_s)
+        .agg(rate.alias(VALUE))
         .select(
             F.concat(F.lit(prefix + "."), F.col(NAME)).alias(NAME),
-            F.col("slot").alias(T),
-            F.col("v").alias(VALUE),
+            window_end().alias(T),
+            F.col(VALUE),
         )
     )
 
@@ -85,34 +115,27 @@ def flush_counters_sql(parsed_sql: str, flush_s: int, prefix: str = "stats") -> 
     )
 
 
-def _flush_gauges(parsed: DataFrame, flush_s: int, prefix: str) -> DataFrame:
-    """Non-delta gauges: last set value per window (ties → max value,
-    same cross-engine tie-break as consolidate cf=last). Delta gauges
-    ride on top as a cumulative adjustment within the window."""
-    from pyspark.sql import Window
-
+def _flush_gauges(
+    parsed: DataFrame, flush_s: int, prefix: str, watermark_s: int = 0
+) -> DataFrame:
+    """Per window, the last SET value plus the micro6-summed deltas
+    (a delta-only window starts from 0). Ties at the same second break
+    to the larger value — the max of the (t, v) struct, the same
+    cross-engine tie-break as consolidate cf=last."""
     g = parsed.where(F.col("metric") == "g")
-    sets = g.where(~F.col("delta"))
-    pts = sets.select(
-        NAME, F.col(T), slot_end(flush_s).alias("slot"), F.col(VALUE).alias("v")
-    )
-    wmax = Window.partitionBy(NAME, "slot")
-    last_set = (
-        pts.withColumn("tmax", F.max(T).over(wmax))
-        .where(F.col(T) == F.col("tmax"))
-        .groupBy(NAME, "slot")
-        .agg(F.max("v").alias("base"))
-    )
-    deltas = (
-        g.where(F.col("delta"))
-        .groupBy(F.col(NAME), slot_end(flush_s).alias("slot"))
-        .agg((F.sum(micro6(F.col(VALUE))).cast("double") / 1000000.0).alias("d"))
-    )
-    j = last_set.join(deltas, [NAME, "slot"], "full")
-    return j.select(
-        F.concat(F.lit(prefix + ".gauges."), F.col(NAME)).alias(NAME),
-        F.col("slot").alias(T),
-        (F.coalesce(F.col("base"), F.lit(0.0)) + F.coalesce(F.col("d"), F.lit(0.0))).alias(VALUE),
+    last_set = F.max(F.when(~F.col("delta"), F.struct(F.col(T), F.col(VALUE))))
+    deltas = F.sum(F.when(F.col("delta"), micro6(F.col(VALUE)))).cast("double")
+    return (
+        flush_slots(g, flush_s, watermark_s)
+        .agg(last_set.alias("last_set"), (deltas / 1000000.0).alias("d"))
+        .select(
+            F.concat(F.lit(prefix + ".gauges."), F.col(NAME)).alias(NAME),
+            window_end().alias(T),
+            (
+                F.coalesce(F.col(f"last_set.{VALUE}"), F.lit(0.0))
+                + F.coalesce(F.col("d"), F.lit(0.0))
+            ).alias(VALUE),
+        )
     )
 
 
@@ -143,12 +166,15 @@ def _flush_timers(
     flush_s: int,
     prefix: str,
     thresholds: tuple[int, ...] = THRESHOLDS,
+    watermark_s: int = 0,
 ) -> DataFrame:
     t_ = parsed.where(F.col("metric") == "ms")
     # ONE aggregate buffer (the sorted sample list); every stat is a
     # cheap post-projection on it — not six parallel collect_lists.
-    grouped = t_.groupBy(F.col(NAME), slot_end(flush_s).alias("slot")).agg(
-        F.array_sort(F.collect_list(VALUE)).alias("arr")
+    grouped = (
+        flush_slots(t_, flush_s, watermark_s)
+        .agg(F.array_sort(F.collect_list(VALUE)).alias("arr"))
+        .select(NAME, window_end().alias("slot"), "arr")
     )
     return timer_stats_from_sorted(grouped, prefix, thresholds)
 
@@ -159,9 +185,7 @@ def timer_stats_from_sorted(
     thresholds: tuple[int, ...] = THRESHOLDS,
 ) -> DataFrame:
     """Stat projection over a (name, slot, arr) relation where ``arr``
-    is the SORTED timer sample list — shared by the batch flush and
-    the streaming window aggregation (identical math by construction).
-    """
+    is the SORTED timer sample list."""
     arr = F.col("arr")
     n = F.size(arr)
     lfold = lambda a: F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x)  # noqa: E731

@@ -41,6 +41,12 @@ _PIXEL_GIF = (
 )
 
 
+# Bound on each pixel queue (server.pixel_hits, server.agg_commands).
+# Nothing inside the server drains them, so a long-lived server would
+# otherwise grow the driver heap without limit; a request whose items
+# do not fit answers 503 and queues nothing.
+QUEUE_CAP = 100_000
+
 # /pixel/{add,addgauge,setgauge,append} → aggregator command kind
 # (http/pixel.go:87-105; semantics in aggregator.go:217-220). Queued
 # as (cmd, name, value, t); aggregator.pixel_agg_frame feeds them to
@@ -51,6 +57,25 @@ _AGG_ROUTES = {
     "/pixel/setgauge": "setgauge",
     "/pixel/append": "append",
 }
+
+
+def _agg_items(cmd: str, q: dict, t: int) -> list:
+    """Form pairs name=value → (cmd, name, value, t) commands.
+    Sscanf("%f") semantics: a numeric PREFIX parses ("1.5x" -> 1.5),
+    and the FIRST value with no numeric prefix aborts the whole loop
+    (pixel.go:133-137 returns), dropping every remaining pair — not
+    just the bad one."""
+    items = []
+    for name, vals in q.items():
+        for v in vals:
+            m = _FLOAT_PREFIX.match(v.lstrip())
+            if not m:
+                _LOG.warning(
+                    "pixel %s: bad value %r=%r (rest dropped)", cmd, name, v
+                )
+                return items
+            items.append((cmd, name, float(m.group(0)), t))
+    return items
 
 
 def _make_handler(catalog: DataFrame, now: int | None):
@@ -75,29 +100,26 @@ def _make_handler(catalog: DataFrame, now: int | None):
             self.end_headers()
             self.wfile.write(_PIXEL_GIF)
 
+        def _enqueue(self, queue: list, items: list) -> bool:
+            """Queue all of ``items``, or none and answer 503 when they
+            would take ``queue`` past QUEUE_CAP."""
+            if len(queue) + len(items) > QUEUE_CAP:
+                self._reply(503, json.dumps(
+                    {"error": f"pixel queue full ({QUEUE_CAP} items)"}
+                ))
+                return False
+            queue.extend(items)
+            return True
+
         def _handle_agg(self, cmd: str, q: dict):
-            # http/pixel.go pixelAggHandler: the pixel goes out FIRST,
-            # then each form pair name=value queues one command.
-            # Sscanf("%f") semantics: a numeric PREFIX parses
-            # ("1.5x" -> 1.5), and the FIRST value with no numeric
-            # prefix aborts the whole loop (pixel.go:133-137 returns),
-            # dropping every remaining pair — not just the bad one.
+            # http/pixel.go pixelAggHandler: each form pair queues one
+            # command and the pixel goes back. The reference sends the
+            # pixel first; queueing first lets a full queue answer 503.
             import time as _time
 
-            self._send_pixel()
             t = now if now is not None else int(_time.time())
-            for name, vals in q.items():
-                for v in vals:
-                    m = _FLOAT_PREFIX.match(v.lstrip())
-                    if not m:
-                        _LOG.warning(
-                            "pixel %s: bad value %r=%r (rest dropped)",
-                            cmd, name, v,
-                        )
-                        return
-                    self.server.agg_commands.append(
-                        (cmd, name, float(m.group(0)), t)
-                    )
+            if self._enqueue(self.server.agg_commands, _agg_items(cmd, q, t)):
+                self._send_pixel()
 
         def do_POST(self):
             # the reference's ParseForm reads urlencoded POST bodies
@@ -162,13 +184,8 @@ def _make_handler(catalog: DataFrame, now: int | None):
                     t = int(t_param) if t_param else (
                         now if now is not None else int(_time.time())
                     )
-                    self.server.pixel_hits.append((metric, t))
-                    data = _PIXEL_GIF
-                    self.send_response(200)
-                    self.send_header("Content-Type", "image/gif")
-                    self.send_header("Content-Length", str(len(data)))
-                    self.end_headers()
-                    self.wfile.write(data)
+                    if self._enqueue(self.server.pixel_hits, [(metric, t)]):
+                        self._send_pixel()
                 else:
                     self._reply(404, '{"error": "not found"}')
             except Exception as e:  # evaluation error → 500, not a hang

@@ -23,6 +23,8 @@ step≫sample-interval ratios the difference vanishes).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -48,103 +50,21 @@ def consolidate(
 
     Returns (name, t, value) where t = slot end, ordered-agnostic.
     """
-    cf = cf.lower()
-    if cf not in CFS:
-        raise ValueError(f"unknown consolidation function: {cf}")
+    return _agg_from_pts(_durations(sf, heartbeat), step, cf, xff)
 
+
+def _durations(sf: DataFrame, heartbeat: int | None) -> DataFrame:
+    """SeriesFrame → (name, t, v, dur): the one lag-duration pass every
+    consolidate variant shares. ``dur`` is the point's interval (p, t];
+    a series' first point has no predecessor and weighs 1s (the
+    reference seeds a DS at its first point; ds.go processDataPoint).
+    An interval longer than ``heartbeat`` leaves ``v`` unknown (NULL)."""
     w = Window.partitionBy(NAME).orderBy(T)
-    prev_t = F.lag(T).over(w)
-    # first point of a series has no predecessor: weight 1s (the
-    # reference seeds a DS at its first point; ds.go processDataPoint)
-    dur = F.coalesce((F.col(T) - prev_t).cast("double"), F.lit(1.0))
+    dur = F.coalesce((F.col(T) - F.lag(T).over(w)).cast("double"), F.lit(1.0))
+    v = F.col(VALUE)
     if heartbeat is not None:
-        # interval longer than heartbeat → value unknown for that span
-        known_val = F.when(dur <= float(heartbeat), F.col(VALUE))
-    else:
-        known_val = F.col(VALUE)
-
-    pts = sf.select(
-        F.col(NAME),
-        F.col(T),
-        slot_end(step).alias("slot"),
-        known_val.alias("v"),
-        dur.alias("dur"),
-    )
-
-    if cf == "last":
-        # Deterministic "last": max value at the latest known t (ties on
-        # t are real in point data; max(v) is the cross-engine tie-break).
-        nn = pts.where(F.col("v").isNotNull())
-        wmax = Window.partitionBy(NAME, "slot")
-        nn = nn.withColumn("tmax", F.max(T).over(wmax))
-        agg = (
-            nn.where(F.col(T) == F.col("tmax"))
-            .groupBy(NAME, "slot")
-            .agg(F.max("v").alias("cv"), F.sum("dur").alias("known"))
-        )
-        if xff > 0.0:
-            # xff needs the full known-duration, not just the last row's
-            full = pts.groupBy(NAME, "slot").agg(
-                F.sum(
-                    F.when(F.col("v").isNotNull(), F.col("dur")).otherwise(0.0)
-                ).alias("known_full")
-            )
-            agg = agg.join(full, [NAME, "slot"]).withColumn(
-                "cv",
-                F.when(
-                    F.col("known_full") / float(step) >= float(xff), F.col("cv")
-                ),
-            )
-        return agg.select(
-            F.col(NAME), F.col("slot").alias(T), F.col("cv").alias(VALUE)
-        )
-
-    known_dur = F.sum(F.when(F.col("v").isNotNull(), F.col("dur")).otherwise(0.0))
-    # Deterministic sums accumulate micro6 BIGINT micro-units (exact,
-    # order-free, codegen-friendly — see model.micro6 for the bound).
-    # dur is an integral double by construction (epoch diffs; 1.0 for
-    # a series head), so its BIGINT cast is exact in both engines.
-    # WMEAN envelope: the per-slot Σ|v|·dur must stay under 9.2e12
-    # (int64 / 1e6) — at dur-sum ≤ 86400 s/slot that's |v| < ~1e8,
-    # comfortably covering metric gauges/rates; values beyond it
-    # (e.g. raw nanosecond counters) should be scaled at ingest, and
-    # an overflow is an ANSI fail-stop, never a silent wrong answer.
-    if cf == "wmean":
-        num = F.sum(
-            F.when(
-                F.col("v").isNotNull(),
-                micro6(F.col("v")) * F.col("dur").cast("bigint"),
-            )
-        )
-        val = F.when(
-            known_dur > 0.0,
-            num.cast("double") / 1000000.0 / known_dur,
-        )
-    elif cf == "avg":
-        val = F.when(
-            F.count("v") > 0,
-            F.sum(micro6(F.col("v"))).cast("double") / 1000000.0 / F.count("v"),
-        )
-    elif cf == "sum":
-        val = F.sum(micro6(F.col("v"))).cast("double") / 1000000.0
-    elif cf == "min":
-        val = F.min("v")
-    elif cf == "max":
-        val = F.max("v")
-    else:  # count
-        val = F.count("v").cast("double")
-
-    agg = pts.groupBy(NAME, "slot").agg(
-        val.alias("cv"), known_dur.alias("known")
-    )
-    if xff > 0.0:
-        agg = agg.withColumn(
-            "cv",
-            F.when(F.col("known") / float(step) >= float(xff), F.col("cv")),
-        )
-    return agg.select(
-        F.col(NAME), F.col("slot").alias(T), F.col("cv").alias(VALUE)
-    )
+        v = F.when(dur <= float(heartbeat), v)
+    return sf.select(F.col(NAME), F.col(T), v.alias("v"), dur.alias("dur"))
 
 
 def consolidate_multi(
@@ -173,35 +93,17 @@ def consolidate_multi(
         if cf.lower() not in CFS:
             raise ValueError(f"unknown consolidation function: {cf}")
     release_multi_cache()
-    w = Window.partitionBy(NAME).orderBy(T)
-    dur = F.coalesce((F.col(T) - F.lag(T).over(w)).cast("double"), F.lit(1.0))
-    if heartbeat is not None:
-        known_val = F.when(dur <= float(heartbeat), F.col(VALUE))
-    else:
-        known_val = F.col(VALUE)
-    pts = sf.select(
-        F.col(NAME), F.col(T), known_val.alias("v"), dur.alias("dur")
-    ).persist()  # fence: returned plan reads this cache
+    pts = _durations(sf, heartbeat).persist()  # fence: returned plan reads this cache
     _MULTI_CACHE.append(pts)
 
     outs = []
     for cf, step, xff in specs:
-        renamed = pts.select(
-            F.col(NAME), F.col(T), F.col("v").alias(VALUE), "dur"
-        )
-        # reuse the single-archive agg logic on the precomputed pts by
-        # faking the lag pass: _agg_from_pts below consumes (v, dur)
-        agg = _agg_from_pts(renamed, step, cf, xff=xff)
         prefix = f"{cf}:{step}/" if not xff else f"{cf}:{step}:xff{xff:g}/"
         outs.append(
-            agg.select(
-                F.concat(F.lit(prefix), F.col(NAME)).alias(NAME),
-                T,
-                VALUE,
+            _agg_from_pts(pts, step, cf, xff=xff).select(
+                F.concat(F.lit(prefix), F.col(NAME)).alias(NAME), T, VALUE
             )
         )
-    from functools import reduce
-
     return reduce(DataFrame.unionAll, outs)
 
 
@@ -216,21 +118,69 @@ def release_multi_cache() -> None:
         _MULTI_CACHE.pop().unpersist()
 
 
+def _partials() -> dict:
+    """Per-slot aggregates over (v, dur) that every CF reads. Each one
+    merges losslessly (sums add, min/max compose), so
+    consolidate_salted can fold them in two phases (``_MERGE``)."""
+    v = F.col("v")
+    return {
+        "num": F.sum(
+            F.when(v.isNotNull(), micro6(v) * F.col("dur").cast("bigint"))
+        ),
+        "msum": F.sum(micro6(v)),
+        "cnt": F.count(v),
+        "vmin": F.min(v),
+        "vmax": F.max(v),
+        "known": F.sum(F.when(v.isNotNull(), F.col("dur")).otherwise(0.0)),
+    }
+
+
+_MERGE = {
+    "num": F.sum, "msum": F.sum, "cnt": F.sum,
+    "vmin": F.min, "vmax": F.max, "known": F.sum,
+}
+
+
+def _cf_value(cf: str, p: dict):
+    """The CF table over ``_partials``-shaped aggregates (cf ≠ last)."""
+    if cf == "wmean":
+        return F.when(
+            p["known"] > 0.0, p["num"].cast("double") / 1000000.0 / p["known"]
+        )
+    if cf == "avg":
+        return F.when(
+            p["cnt"] > 0, p["msum"].cast("double") / 1000000.0 / p["cnt"]
+        )
+    if cf == "sum":
+        return p["msum"].cast("double") / 1000000.0
+    if cf == "count":
+        return p["cnt"].cast("double")
+    return p["vmin"] if cf == "min" else p["vmax"]
+
+
 def _agg_from_pts(
     pts: DataFrame, step: int, cf: str, xff: float = 0.0
 ) -> DataFrame:
-    """Aggregation stage of consolidate() over a precomputed
-    (name, t, value, dur) relation. ``cf`` must be in CFS (validated
-    here too so direct callers get the same error as consolidate());
-    ``xff`` NULLs a slot whose known-duration fraction is below it."""
+    """Aggregation stage of consolidate() over a ``_durations``
+    relation (name, t, v, dur). ``cf`` must be in CFS; ``xff`` NULLs a
+    slot whose known-duration fraction is below it."""
     cf = cf.lower()
     if cf not in CFS:
         raise ValueError(f"unknown consolidation function: {cf}")
-    p = pts.select(
-        NAME, T, slot_end(step).alias("slot"), F.col(VALUE).alias("v"), "dur"
-    )
-    known_dur = F.sum(F.when(F.col("v").isNotNull(), F.col("dur")).otherwise(0.0))
+    p = pts.select(NAME, T, slot_end(step).alias("slot"), "v", "dur")
+    # Deterministic sums accumulate micro6 BIGINT micro-units (exact,
+    # order-free, codegen-friendly — see model.micro6 for the bound).
+    # dur is an integral double by construction (epoch diffs; 1.0 for
+    # a series head), so its BIGINT cast is exact in both engines.
+    # WMEAN envelope: the per-slot Σ|v|·dur must stay under 9.2e12
+    # (int64 / 1e6) — at dur-sum ≤ 86400 s/slot that's |v| < ~1e8,
+    # comfortably covering metric gauges/rates; values beyond it
+    # (e.g. raw nanosecond counters) should be scaled at ingest, and
+    # an overflow is an ANSI fail-stop, never a silent wrong answer.
+    parts = _partials()
     if cf == "last":
+        # Deterministic "last": max value at the latest known t (ties on
+        # t are real in point data; max(v) is the cross-engine tie-break).
         nn = p.where(F.col("v").isNotNull())
         wmax = Window.partitionBy(NAME, "slot")
         nn = nn.withColumn("tmax", F.max(T).over(wmax))
@@ -240,37 +190,16 @@ def _agg_from_pts(
             .agg(F.max("v").alias("cv"))
         )
         if xff > 0.0:
-            full = p.groupBy(NAME, "slot").agg(known_dur.alias("kf"))
+            # xff needs the full known-duration, not just the last row's
+            full = p.groupBy(NAME, "slot").agg(parts["known"].alias("kf"))
             agg = agg.join(full, [NAME, "slot"]).withColumn(
                 "cv",
                 F.when(F.col("kf") / float(step) >= float(xff), F.col("cv")),
             )
         return agg.select(NAME, F.col("slot").alias(T), F.col("cv").alias(VALUE))
-    if cf == "wmean":
-        num = F.sum(
-            F.when(
-                F.col("v").isNotNull(),
-                micro6(F.col("v")) * F.col("dur").cast("bigint"),
-            )
-        )
-        val = F.when(
-            known_dur > 0.0, num.cast("double") / 1000000.0 / known_dur
-        )
-    elif cf == "min":
-        val = F.min("v")
-    elif cf == "max":
-        val = F.max("v")
-    elif cf == "sum":
-        val = F.sum(micro6(F.col("v"))).cast("double") / 1000000.0
-    elif cf == "count":
-        val = F.count("v").cast("double")
-    else:
-        val = F.when(
-            F.count("v") > 0,
-            F.sum(micro6(F.col("v"))).cast("double") / 1000000.0 / F.count("v"),
-        )
+    val = _cf_value(cf, parts)
     if xff > 0.0:
-        val = F.when(known_dur / float(step) >= float(xff), val)
+        val = F.when(parts["known"] / float(step) >= float(xff), val)
     agg = p.groupBy(NAME, "slot").agg(val.alias("cv"))
     return agg.select(NAME, F.col("slot").alias(T), F.col("cv").alias(VALUE))
 
@@ -365,69 +294,33 @@ def consolidate_salted(
     pmod(hash(t), k) — phase 1 aggregates (name, slot, salt) partial
     states, phase 2 merges k rows per slot — and is EXACTLY equal to
     consolidate() because every partial state merges losslessly:
-    decimal sums add, counts add, min/max compose, and WMEAN merges as
+    micro6 sums add, counts add, min/max compose, and WMEAN merges as
     (Σ num_i) / (Σ known_i). Only `last` is excluded (its max-t row
     selection needs no salting: the window already partitions by
     (name, slot)).
 
-    The lag-duration pass is identical to consolidate(); durations are
-    computed BEFORE salting, so slot semantics do not change."""
+    The lag-duration pass is consolidate()'s own (``_durations``);
+    durations are computed BEFORE salting, so slot semantics do not
+    change."""
     cf = cf.lower()
     if cf not in CFS or cf == "last":
         raise ValueError(f"consolidate_salted does not support cf={cf!r}")
-    w = Window.partitionBy(NAME).orderBy(T)
-    dur = F.coalesce((F.col(T) - F.lag(T).over(w)).cast("double"), F.lit(1.0))
-    if heartbeat is not None:
-        known_val = F.when(dur <= float(heartbeat), F.col(VALUE))
-    else:
-        known_val = F.col(VALUE)
-    pts = sf.select(
+    pts = _durations(sf, heartbeat).select(
         F.col(NAME),
         slot_end(step).alias("slot"),
-        known_val.alias("v"),
-        dur.alias("dur"),
+        "v",
+        "dur",
         F.pmod(F.hash(F.col(T)), n_salts).alias("salt"),
     )
-    known_dur = F.sum(F.when(F.col("v").isNotNull(), F.col("dur")).otherwise(0.0))
-    # phase 1: per-salt partial states (all lossless under addition —
-    # micro-unit partial sums are exact int64, so the two-phase merge
-    # is bit-equal to the single groupBy)
+    # phase 1: per-salt partial states (micro-unit partial sums are
+    # exact int64, so the two-phase merge is bit-equal to one groupBy)
     partial = pts.groupBy(NAME, "slot", "salt").agg(
-        F.sum(
-            F.when(
-                F.col("v").isNotNull(),
-                micro6(F.col("v")) * F.col("dur").cast("bigint"),
-            )
-        ).alias("p_num"),
-        F.sum(micro6(F.col("v"))).alias("p_sum"),
-        F.count("v").alias("p_cnt"),
-        F.min("v").alias("p_min"),
-        F.max("v").alias("p_max"),
-        known_dur.alias("p_known"),
+        *[c.alias(k) for k, c in _partials().items()]
     )
     # phase 2: merge k partials per (name, slot)
-    m_num = F.sum("p_num")
-    m_sum = F.sum("p_sum")
-    m_cnt = F.sum("p_cnt")
-    m_known = F.sum("p_known")
-    if cf == "wmean":
-        val = F.when(
-            m_known > 0.0, m_num.cast("double") / 1000000.0 / m_known
-        )
-    elif cf == "avg":
-        val = F.when(
-            m_cnt > 0, m_sum.cast("double") / 1000000.0 / m_cnt
-        )
-    elif cf == "sum":
-        val = m_sum.cast("double") / 1000000.0
-    elif cf == "min":
-        val = F.min("p_min")
-    elif cf == "max":
-        val = F.max("p_max")
-    else:  # count
-        val = m_cnt.cast("double")
+    merged = {k: fold(k) for k, fold in _MERGE.items()}
     return (
         partial.groupBy(NAME, "slot")
-        .agg(val.alias("cv"))
+        .agg(_cf_value(cf, merged).alias("cv"))
         .select(F.col(NAME), F.col("slot").alias(T), F.col("cv").alias(VALUE))
     )

@@ -5,19 +5,20 @@ arrive on a socket, a director routes them to per-DS caches, flushers
 write consolidated chunks to PostgreSQL on a timer.
 
 Spark-first: readStream (socket/file/kafka) → protocol parse (the same
-pure-column parsers as batch — identical semantics by construction) →
-watermarked sliding aggregation = the RRA consolidation → sink. The
-vcache+flusher machinery collapses into watermark + output-mode
-semantics: late points within the watermark update their slot exactly
-like the reference's PDP updates; beyond it they're dropped (the
-reference drops points older than the last flush too,
+pure-column parsers as batch) → the same aggregation as batch → sink.
+Every windowed aggregation here groups through
+``aggregator.flush_slots``, and the statsd/pixel pipelines call the
+batch flush family builders themselves, so a streamed window equals
+the batch one by construction. The vcache+flusher machinery collapses
+into watermark + output-mode semantics: append mode writes a slot once
+the watermark passes its end; points later than the watermark are
+dropped (the reference drops points older than the last flush too,
 aggregator.go:130-132).
 
-The streaming WMEAN uses arrival-order weighting inside the slot
-(sum/count on micro-batch rows); exact lag-based duration weighting
-needs the previous point which streaming can't see across batches
-without state — consolidate() remains the batch/backfill path, and
-`statsd_flush`'s window aggregation IS expressible streaming-side.
+The streaming RRA consolidation averages the slot's points without
+duration weights: lag-based weighting needs each series' previous
+point across micro-batches, i.e. state — consolidate() remains the
+batch/backfill path for WMEAN.
 """
 
 from __future__ import annotations
@@ -25,6 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..aggregator import (
+    _flush_counters,
+    _flush_gauges,
+    _flush_timers,
+    flush_slots,
+    window_end,
+)
 from ..model import NAME, T, VALUE, micro6
 from ..sources.graphite import parse_graphite_lines
 from ..sources.statsd import parse_statsd_packets
@@ -75,16 +83,11 @@ def streaming_consolidate(
 ) -> DataFrame:
     """RRA consolidation as a watermarked windowed aggregation.
 
-    Window end == the slot-end label of batch consolidate(); late data
-    inside the watermark revises the slot (update mode), like PDP
-    accumulation before movePdpToDps.
-
-    Slot alignment: Spark windows are [start, end) but RRA slots are
-    (start, end] (rra.go movePdpToDps) — shifting event time by -1s
-    maps boundary points into the same end-labeled slot as the batch
-    consolidate(), so streaming and batch results are identical on
-    integer-second data."""
-    with_ts = parsed.withColumn("ts", (F.col(T) - 1).cast("timestamp"))
+    Window end == the slot-end label of batch consolidate() (event time
+    t - 1, see aggregator.flush_slots), so streaming and batch slots
+    are identical on integer-second data; late data inside the
+    watermark revises the slot (update mode), like PDP accumulation
+    before movePdpToDps."""
     # avg/sum accumulate micro6 BIGINT micro-units exactly like batch
     # consolidate() — a plain double sum's result depends on partial-
     # aggregation order (varies run to run, and vs DuckDB), which
@@ -97,17 +100,12 @@ def streaming_consolidate(
         "min": F.min(VALUE),
         "max": F.max(VALUE),
         "count": F.count(VALUE).cast("double"),
-        "last": F.max_by(VALUE, "ts"),
+        "last": F.max_by(VALUE, T),
     }[cf]
-    w = (
-        with_ts.withWatermark("ts", f"{watermark_s} seconds")
-        .groupBy(F.window("ts", f"{step_s} seconds"), F.col(NAME))
+    return (
+        flush_slots(parsed, step_s, watermark_s)
         .agg(agg.alias(VALUE))
-    )
-    return w.select(
-        F.col(NAME),
-        F.unix_timestamp(F.col("window.end")).cast("bigint").alias(T),
-        F.col(VALUE).cast("double"),
+        .select(F.col(NAME), window_end().alias(T), F.col(VALUE).cast("double"))
     )
 
 
@@ -140,31 +138,14 @@ def run_statsd_file_pipeline(
     flush_s: int = 60,
     watermark_s: int = 600,
 ) -> None:
-    """Streaming statsd counters: packets → parse → per-window rate —
-    the aggworker/flusher loop (receiver/aggworker.go) as one
-    watermarked aggregation. Timers/gauges follow the same shape; the
-    batch `statsd_flush` stays the backfill authority (its sorted-list
-    percentile stats need the full window, which append-mode emission
-    guarantees here too).
+    """Streaming statsd counters: packets → parse → the batch counter
+    flush (per-window micro6 rate) — the aggworker/flusher loop
+    (receiver/aggworker.go) as one watermarked aggregation.
 
     Input files carry `t packet` lines so replays are deterministic
     (see read_statsd_stream)."""
     parsed = read_statsd_stream(spark, in_path)
-    counters = parsed.where(F.col("metric") == "c").withColumn(
-        "ts", (F.col(T) - 1).cast("timestamp")
-    )
-    rate = (
-        counters.withWatermark("ts", f"{watermark_s} seconds")
-        .groupBy(F.window("ts", f"{flush_s} seconds"), F.col(NAME))
-        .agg(
-            (F.sum(F.col(VALUE) / F.col("sample")) / float(flush_s)).alias(VALUE)
-        )
-        .select(
-            F.concat(F.lit("stats."), F.col(NAME)).alias(NAME),
-            F.unix_timestamp(F.col("window.end")).cast("bigint").alias(T),
-            F.col(VALUE).cast("double"),
-        )
-    )
+    rate = _flush_counters(parsed, flush_s, "stats", watermark_s)
     run_available_now(rate, checkpoint, path=out_path)
 
 
@@ -176,31 +157,14 @@ def run_statsd_timers_pipeline(
     flush_s: int = 60,
     watermark_s: int = 600,
 ) -> None:
-    """Streaming statsd TIMERS: the full percentile-stat family
-    (count/lower/upper/sum/mean + threshold stats) as one watermarked
-    windowed aggregation whose buffer is the sorted sample list —
-    append mode guarantees the window is complete when it emits, so
-    the sorted-list stats are exact, identical math to the batch
-    flush (timer_stats_from_sorted is shared code). State per open
-    window = the sample list, bounded by events-per-flush like the
-    reference's in-memory timer buffer (aggregator.go:141-169)."""
-    from ..aggregator import timer_stats_from_sorted
-
+    """Streaming statsd TIMERS: the batch timer flush — one sorted
+    sample list per window, then the percentile-stat family. Append
+    mode emits a window only when it is complete, so the sorted-list
+    stats are exact. State per open window = the sample list, bounded
+    by events-per-flush like the reference's in-memory timer buffer
+    (aggregator.go:141-169)."""
     parsed = read_statsd_stream(spark, in_path)
-    timers = parsed.where(F.col("metric") == "ms").withColumn(
-        "ts", (F.col(T) - 1).cast("timestamp")
-    )
-    grouped = (
-        timers.withWatermark("ts", f"{watermark_s} seconds")
-        .groupBy(F.window("ts", f"{flush_s} seconds"), F.col(NAME))
-        .agg(F.array_sort(F.collect_list(VALUE)).alias("arr"))
-        .select(
-            F.col(NAME),
-            F.unix_timestamp(F.col("window.end")).cast("bigint").alias("slot"),
-            "arr",
-        )
-    )
-    stats = timer_stats_from_sorted(grouped, "stats")
+    stats = _flush_timers(parsed, flush_s, "stats", watermark_s=watermark_s)
     run_available_now(stats, checkpoint, path=out_path)
 
 
@@ -212,42 +176,12 @@ def run_statsd_gauges_pipeline(
     flush_s: int = 60,
     watermark_s: int = 600,
 ) -> None:
-    """Streaming statsd GAUGES: per window, the last SET value (ties
-    at the same second break to the larger value — max of the (t, v)
-    struct is exactly the batch tmax-then-max-v rule) plus the
-    window's micro6-summed delta adjustments. Window-local semantics
-    matching the batch authority `_flush_gauges` bit-for-bit; append
-    mode emits each window once its watermark passes."""
-    from ..model import micro6
-
+    """Streaming statsd GAUGES: the batch gauge flush — per window, the
+    last SET value (ties → larger value) plus the micro6-summed
+    deltas; append mode emits each window once its watermark passes."""
     parsed = read_statsd_stream(spark, in_path)
-    g = parsed.where(F.col("metric") == "g").withColumn(
-        "ts", (F.col(T) - 1).cast("timestamp")
-    )
-    agg = (
-        g.withWatermark("ts", f"{watermark_s} seconds")
-        .groupBy(F.window("ts", f"{flush_s} seconds"), F.col(NAME))
-        .agg(
-            F.max(
-                F.when(~F.col("delta"), F.struct(F.col(T), F.col(VALUE)))
-            ).alias("last_set"),
-            (
-                F.sum(F.when(F.col("delta"), micro6(F.col(VALUE)))).cast(
-                    "double"
-                )
-                / 1000000.0
-            ).alias("d"),
-        )
-        .select(
-            F.concat(F.lit("stats.gauges."), F.col(NAME)).alias(NAME),
-            F.unix_timestamp(F.col("window.end")).cast("bigint").alias(T),
-            (
-                F.coalesce(F.col(f"last_set.{VALUE}"), F.lit(0.0))
-                + F.coalesce(F.col("d"), F.lit(0.0))
-            ).cast("double").alias(VALUE),
-        )
-    )
-    run_available_now(agg, checkpoint, path=out_path)
+    gauges = _flush_gauges(parsed, flush_s, "stats", watermark_s)
+    run_available_now(gauges, checkpoint, path=out_path)
 
 
 def run_pixel_counter_pipeline(
@@ -260,28 +194,8 @@ def run_pixel_counter_pipeline(
     watermark_s: int = 60,
 ) -> None:
     """Streaming counter flush over an already-parsed pixel command
-    frame (aggregator.pixel_agg_parsed shape): the façade's
-    /pixel/add hits rate-convert in the SAME watermarked window shape
-    as run_statsd_file_pipeline, but with the micro6 BIGINT fold so
-    the registered query hash-checks (a plain double SUM is
-    accumulation-order-dependent)."""
+    frame (aggregator.pixel_agg_parsed shape): the façade's /pixel/add
+    hits run through the batch counter flush, micro6 rate included."""
     src = spark.readStream.schema(schema).parquet(in_path)
-    counters = src.where(F.col("metric") == "c").withColumn(
-        "ts", (F.col("t") - 1).cast("timestamp")
-    )
-    mv = F.floor(
-        F.col("value") / F.col("sample") * 1000000.0 + F.lit(0.5)
-    ).cast("bigint")
-    rate = (
-        counters.withWatermark("ts", f"{watermark_s} seconds")
-        .groupBy(F.window("ts", f"{flush_s} seconds"), F.col("name"))
-        .agg(F.sum(mv).alias("smv"))
-        .select(
-            F.concat(F.lit("stats."), F.col("name")).alias("name"),
-            F.unix_timestamp(F.col("window.end")).cast("bigint").alias("t"),
-            (F.col("smv").cast("double") / 1000000.0 / float(flush_s)).alias(
-                "value"
-            ),
-        )
-    )
+    rate = _flush_counters(src, flush_s, "stats", watermark_s)
     run_available_now(rate, checkpoint, path=out_path)
