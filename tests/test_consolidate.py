@@ -145,6 +145,17 @@ def _gappy_series(spark):
     return rows
 
 
+def test_heartbeat_consolidate_computes_one_lag(spark):
+    """The heartbeat test reads the selected ``dur`` column, so the
+    optimized plan's Window computes ``lag(t)`` once."""
+    sf = mk(spark, _gappy_series(spark))
+    plan = (
+        consolidate(sf, 300, cf="wmean", xff=0.5, heartbeat=600)
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert plan.count("lag(") == 1, plan
+
+
 @pytest.mark.parametrize("heartbeat", [None, 600])
 @pytest.mark.parametrize("xff", [0.0, 0.5])
 @pytest.mark.parametrize("cf", CFS)

@@ -231,6 +231,22 @@ def test_embedding_dedup_exact_and_lsh_subset(spark):
         assert c == exact[p]
 
 
+def test_dedup_embedding_refuses_past_row_cap(spark, monkeypatch):
+    """dedup_embedding collects at most DEDUP_EMBEDDING_MAX_ROWS + 1
+    rows; one more than the cap is a loud error naming the LSH
+    variant, and the cap itself still runs."""
+    from tgres_spark.pipeline import similarity
+
+    monkeypatch.setattr(similarity, "DEDUP_EMBEDDING_MAX_ROWS", 3)
+    rows = [(v, [float(v + 1)] + [0.0] * 63, 0) for v in range(4)]
+    schema = "vec_id long, embedding array<float>, label int"
+    emb = spark.createDataFrame(rows, schema)
+    with pytest.raises(ValueError, match="dedup_embedding_lsh"):
+        similarity.dedup_embedding(emb)
+    ok = similarity.dedup_embedding(spark.createDataFrame(rows[:3], schema))
+    assert ok.count() == 3  # parallel vectors: every pair has cos 1
+
+
 def test_components_cluster_transitive_dups(spark):
     """A chain a~b, b~c clusters all three to root min(id), even
     though a and c never share a band; unrelated docs stay singletons."""

@@ -355,3 +355,147 @@ def test_as_percent_over_unprojected_partitioned_archive(spark, tmp_path):
     assert body == render_json(catalog.select("name", "t", "value"), target)
     out = json.loads(body)
     assert out and all(len(s["datapoints"]) == 9 for s in out)
+
+
+def _jvm_render_json(catalog, targets, *args, **kw):
+    """The JVM-side shaping ``render_json`` had before it moved to the
+    driver: groupBy + sorted collect_list + orderBy. Kept as the
+    reference the driver-side shaping must equal byte for byte."""
+    from pyspark.sql import functions as F
+
+    from tgres_spark.render import render_df
+
+    shaped = (
+        render_df(catalog, targets, *args, **kw)
+        .groupBy("target", "name")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct(F.col("t").alias("t"), F.col("value").alias("v")))
+            ).alias("pts")
+        )
+        .orderBy("target", "name")
+    )
+    return json.dumps(
+        [
+            {"target": r["name"], "datapoints": [[p["v"], p["t"]] for p in r["pts"]]}
+            for r in shaped.collect()
+        ]
+    )
+
+
+def _jvm_find_json(catalog, query):
+    """``find_json`` before the name prefilter and the driver-side sort."""
+    from tgres_spark.dsl.find import find
+
+    rows = find(catalog.select("name").distinct(), query).orderBy("path").collect()
+    return json.dumps(
+        [
+            {
+                "text": r["path"].rsplit(".", 1)[-1],
+                "id": r["path"],
+                "leaf": int(r["is_leaf"]),
+                "expandable": 1 - int(r["is_leaf"]),
+            }
+            for r in rows
+        ]
+    )
+
+
+@pytest.fixture()
+def odd_catalog(spark):
+    """Non-ASCII names whose UTF-16 order differs from code point order
+    (U+FF5E sorts before U+1F600 in UTF-8, after it in UTF-16), and a
+    series with NULL and NaN values."""
+    rows = []
+    for name in ("web.h1.hits", "web.h2.hits", "web.é.hits", "web.～.hits",
+                 "web.\U0001F600.hits", "web.Z.hits"):
+        for t in (60, 120, 180):
+            rows.append((name, t, float(t)))
+    rows += [("web.nan.hits", 60, None), ("web.nan.hits", 120, float("nan")),
+             ("web.nan.hits", 180, 1.0), ("web.nan.hits", 240, None)]
+    return spark.createDataFrame(rows, "name string, t long, value double")
+
+
+@pytest.mark.parametrize(
+    "targets",
+    [
+        # request order differs from the target-string order
+        ["web.h2.hits", "scale(web.h1.hits,2)", "web.h1.hits"],
+        # the same series name under two targets
+        ["web.*.hits", "web.h1.hits"],
+        ["web.nan.hits"],
+        # group(a, a) yields every (name, t) point twice
+        ["group(web.h1.hits,web.h1.hits)"],
+        ["web.*.hits"],
+    ],
+)
+def test_render_json_equals_jvm_shaping(odd_catalog, targets):
+    from tgres_spark.render import render_json
+
+    body = render_json(odd_catalog, targets)
+    assert body == _jvm_render_json(odd_catalog, targets)
+    out = json.loads(body)
+    assert out
+    if targets[0] == "web.h2.hits":
+        assert [s["target"] for s in out] == [
+            "scale(web.h1.hits,2)", "web.h1.hits", "web.h2.hits",
+        ]
+    if targets == ["web.nan.hits"]:
+        assert "NaN" in body and "null" in body
+    if targets[0].startswith("group("):
+        assert [p[1] for p in out[0]["datapoints"]] == [60, 60, 120, 120, 180, 180]
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        "x.{a.b,c}",   # a brace alternative containing a dot
+        "x.a.*",       # x.a.b is a leaf and a branch; x.a is too short
+        "x.*.*.*",     # names with fewer segments than the pattern
+        "*",
+        "nl.a",        # 'nl.a\n' continues: Java's $ accepts the newline
+        "nl.*",
+        "nl.a*.*",
+        "ü*.*",
+    ],
+)
+def test_find_json_equals_jvm_shaping(spark, query):
+    from tgres_spark.render import find_json
+
+    names = ["x", "x.a", "x.a.b", "x.a.b.c", "x.c", "x.c.d", "x.a.bb",
+             "nl.a\n.b", "nl.a\nb.c", "nl.a.b\nc", "nl.a", "ü.1", "ü2.x.y"]
+    catalog = spark.createDataFrame(
+        [(n, 60, 1.0) for n in names], "name string, t long, value double"
+    )
+    body = find_json(catalog, query)
+    assert body == _jvm_find_json(catalog, query)
+    nodes = json.loads(body)
+    assert nodes or query == "x.*.*.*"
+    if query == "x.a.*":
+        assert nodes == [
+            {"text": "b", "id": "x.a.b", "leaf": 1, "expandable": 0},
+            {"text": "bb", "id": "x.a.bb", "leaf": 1, "expandable": 0},
+        ]
+
+
+def _jobs(spark, group, fn):
+    """Spark jobs ``fn()`` runs, counted through its job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_render_and_find_job_counts(spark, catalog, tmp_path):
+    """The driver shapes the JSON from one collect: a render of one
+    exact name is a single job, a browse at most two."""
+    from tgres_spark.render import find_json, render_json
+
+    catalog.write.parquet(str(tmp_path / "cat"))
+    cat = spark.read.parquet(str(tmp_path / "cat"))
+    assert _jobs(spark, "test.render.single", lambda: render_json(cat, ["web.h1.hits"])) == 1
+    assert _jobs(spark, "test.find", lambda: find_json(cat, "web.*")) <= 2

@@ -191,21 +191,6 @@ def dsum(col: str | Column) -> Column:
     return F.sum(dec6(c))
 
 
-def fsum(col: str | Column) -> Column:
-    """dsum cast back to double (matches oracle CAST(SUM(...) AS DOUBLE))."""
-    return dsum(col).cast("double")
-
-
-def favg(col: str | Column) -> Column:
-    """Order-independent mean: exact decimal sum / count, as double."""
-    c = F.col(col) if isinstance(col, str) else col
-    return dsum(c).cast("double") / F.count(c)
-
-
-def oracle_dsum(expr: str) -> str:
-    return f"CAST(SUM(CAST(FLOOR(({expr}) * 1000000.0 + 0.5) / 1000000.0 AS DECIMAL(38,6))) AS DOUBLE)"
-
-
 def oracle_davg(expr: str) -> str:
     return (
         f"CAST(SUM(CAST(FLOOR(({expr}) * 1000000.0 + 0.5) / 1000000.0 AS DECIMAL(38,6))) AS DOUBLE) / COUNT({expr})"

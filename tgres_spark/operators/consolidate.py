@@ -61,10 +61,12 @@ def _durations(sf: DataFrame, heartbeat: int | None) -> DataFrame:
     An interval longer than ``heartbeat`` leaves ``v`` unknown (NULL)."""
     w = Window.partitionBy(NAME).orderBy(T)
     dur = F.coalesce((F.col(T) - F.lag(T).over(w)).cast("double"), F.lit(1.0))
-    v = F.col(VALUE)
-    if heartbeat is not None:
-        v = F.when(dur <= float(heartbeat), v)
-    return sf.select(F.col(NAME), F.col(T), v.alias("v"), dur.alias("dur"))
+    pts = sf.select(F.col(NAME), F.col(T), F.col(VALUE).alias("v"), dur.alias("dur"))
+    if heartbeat is None:
+        return pts
+    # test the selected column: inlining ``dur`` again would make the
+    # Window compute a second, identical lag
+    return pts.withColumn("v", F.when(F.col("dur") <= float(heartbeat), F.col("v")))
 
 
 def consolidate_multi(

@@ -379,6 +379,9 @@ def ann_ivf_search(
 DEDUP_LSH_TABLES = 4
 DEDUP_LSH_PLANES = 8
 EMB_DIM = 64
+# dedup_embedding collects every embedding to the driver and scores all
+# N² pairs; past this many rows it refuses (≈100 MB of driver rows)
+DEDUP_EMBEDDING_MAX_ROWS = 50_000
 
 
 def _planes(
@@ -427,7 +430,13 @@ def dedup_embedding(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
 
     spark = emb.sparkSession
     dim = EMB_DIM
-    rows = emb.select("vec_id", "embedding").collect()
+    cap = DEDUP_EMBEDDING_MAX_ROWS
+    rows = emb.select("vec_id", "embedding").limit(cap + 1).collect()
+    if len(rows) > cap:
+        raise ValueError(
+            f"dedup_embedding collects every embedding to the driver and "
+            f"takes at most {cap} rows; use dedup_embedding_lsh for larger inputs"
+        )
     if not rows:
         return literal_df(spark, [], "vec_a long, vec_b long, cos double")
     import numpy as np

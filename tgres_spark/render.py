@@ -9,17 +9,26 @@ No HTTP server here (the engine is a library over a cluster); these
 functions produce exactly the same payloads, so any thin HTTP wrapper
 (Flask/our own) is presentation only. graphite-web's JSON shape is the
 contract charting UIs expect.
+
+Spark computes the answer; the driver arranges it. A response is a few
+thousand points at most, so ``render_json`` and ``find_json`` collect
+their result rows once and sort and group them in Python, in Spark's
+ascending order (``_asc``). A JVM-side ``orderBy`` would add a range
+sampling job that recomputes the whole plan.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
+import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dsl.evaluator import DslContext, evaluate
 from .dsl.find import find
+from .dsl.parser import glob_to_regex
 from .model import NAME, T, VALUE
 
 
@@ -48,6 +57,17 @@ def render_df(
     return reduce(DataFrame.unionAll, parts)
 
 
+def _asc(x):
+    """Sort key of one value in Spark's ascending order: NULL first,
+    NaN above every number. Strings compare by code point, which is
+    Spark's UTF-8 byte order."""
+    if x is None:
+        return (0,)
+    if isinstance(x, float) and math.isnan(x):
+        return (2,)
+    return (1, x)
+
+
 def render_json(
     catalog: DataFrame,
     targets: list[str],
@@ -57,34 +77,34 @@ def render_json(
     now: int | None = None,
 ) -> str:
     """graphite-web JSON: [{"target": series_name, "datapoints":
-    [[value, ts], ...]}]. Datapoint assembly happens JVM-side
-    (collect_list of sorted structs); the driver only json-serializes
-    the already-shaped rows."""
-    df = render_df(catalog, targets, t_from, t_to, max_points, now=now)
-    shaped = (
-        df.groupBy("target", NAME)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(T).alias("t"), F.col(VALUE).alias("v")))
-            ).alias("pts")
-        )
-        .orderBy("target", NAME)
-    )
-    out = []
-    for r in shaped.collect():
-        out.append(
-            {
-                "target": r[NAME],
-                "datapoints": [[p["v"], p["t"]] for p in r["pts"]],
-            }
-        )
+    [[value, ts], ...]}], one entry per (target expression, series),
+    ordered by expression string then series name, points by (t,
+    value). One collect of ``render_df``'s rows; the driver sorts and
+    groups them."""
+    rows = render_df(catalog, targets, t_from, t_to, max_points, now=now).collect()
+    rows.sort(key=lambda r: (r[0], _asc(r[1]), _asc(r[2]), _asc(r[3])))
+    out = [
+        {"target": name, "datapoints": [[r[3], r[2]] for r in pts]}
+        for (_, name), pts in itertools.groupby(rows, key=lambda r: (r[0], r[1]))
+    ]
     return json.dumps(out)
 
 
 def find_json(catalog: DataFrame, query: str) -> str:
     """`/metrics/find` JSON: [{"text": leaf_name, "id": path,
-    "leaf": 0/1, "expandable": 0/1}] (graphite-web "treejson")."""
-    rows = find(catalog.select(NAME).distinct(), query).orderBy("path").collect()
+    "leaf": 0/1, "expandable": 0/1}] (graphite-web "treejson"),
+    ordered by path.
+
+    Before the ``distinct``, one ``rlike`` keeps the names whose
+    leading segments match the glob: the glob's regex, then an
+    optional ``.rest``. ``\\R?`` lets a segment end in a line
+    terminator, which Java's ``$`` in ``find``'s own regex accepts. It
+    keeps a superset of ``find``'s matches, and ``find`` still applies
+    its exact predicate on top."""
+    names = catalog.select(NAME).where(
+        F.col(NAME).rlike("^" + glob_to_regex(query)[1:-1] + r"(?:\R?(?s:\..*))?$")
+    )
+    rows = sorted(find(names.distinct(), query).collect(), key=lambda r: r["path"])
     out = [
         {
             "text": r["path"].rsplit(".", 1)[-1],
