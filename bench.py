@@ -1,15 +1,17 @@
 #!/usr/bin/env python3
-"""Headline benchmark: runs the flagship queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Headline benchmark: times every key in ``measure.BENCH_QUERIES`` at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric": ...,
+"value": total_sec, "unit": "sec", "queries": {name: sec}, ...}.
 
-Query set: the tgres write path (multi-RRA rollup), the DSL read path
-(sum/moving/percentile over the archive), statsd parse→flush, the
-relational spine (q1/q3/q5/q6), sessionization, and the LLM-pipeline
-headliners (minhash LSH dedup, brute-force ANN, text quality).
-Each timing includes full materialization (count) but not session
-startup; a warmup pass primes the JVM + parquet footer caches.
+The protocol (warm-up, clearCache, best of 3, full materialization
+through the noop sink, per-run steal) is ``tgres_spark/measure.py``.
+Session startup is not timed. The run is gated against
+BENCH_BUDGET.json only when the budget was frozen under this run's
+(sf, cpus, materialize) key. Each violated key (worst 16 first) is
+timed again alone, as extra evidence in ``violations_retry``.
+
+Usage: python bench.py
 """
 
 from __future__ import annotations
@@ -17,444 +19,101 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+REPO = Path(__file__).resolve().parent
+sys.path.insert(0, str(REPO))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-BENCH_QUERIES = [
-    "rrd_multi_rra",
-    "dsl_sumSeries",
-    "dsl_movingAverage",
-    "dsl_percentileOfSeries",
-    "statsd_flush_timers",
-    "tpch_q1",
-    "tpch_q3",
-    "tpch_q5",
-    "tpch_q6",
-    "events_sessionize",
-    "dsl_expression_parser",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_embedding_lsh",
-    "dedup_components",
-    "ann_cosine_topk",
-    "ann_lsh_topk",
-    "events_retention",
-    "events_hist_quantiles",
-    "pipeline_corpus_clean",
-    "text_quality",
-    # round-5 additions (new keys only — existing keys stay for
-    # round-over-round comparability)
-    "pipeline_gopher_filter",
-    "corpus_top_ngrams",
-    "ann_pq_search",
-    "events_anomaly",
-    # round-5 continuation: the two heaviest new relational shapes +
-    # the sketch composition paths
-    "tpch_q8",
-    "tpch_q18",
-    "events_hll_distinct",
-    "events_conversion_lag",
-    # round-5 fourth session: the overlapping-window dedup profile
-    # (heaviest new explode), the as-of join (union+window vs range
-    # join), and the CMS heavy hitters (third mergeable sketch)
-    "pipeline_span_dedup",
-    "events_asof_join",
-    "events_cms_heavy_hitters",
-    # round-6 additions: the multimodal dedup bridge (phash + shared
-    # pigeonhole blocking) and the fourth mergeable sketch
-    "mm_phash_dedup",
-    "events_bloom_membership",
-    # round-7 additions: the video keyframe dedup bridge (stride
-    # explode multiplies rows BEFORE the fingerprint — the heaviest
-    # phash-family path), the residual-encoded IVFADC, and the
-    # bigram-LM quality scorer (two corpus aggregates + co-keyed
-    # token joins)
-    "mm_video_keyframes",
-    "ann_ivfadc_search",
-    "text_bigram_lm",
-    # round-7 continuation: the CCNet perplexity cut (bigram LM +
-    # histogram terciles — the heaviest text-pipeline composition)
-    # and the int8 scalar quantizer (map-only, measures the
-    # 64-wide zip_with algebra path)
-    "pipeline_perplexity_filter",
-    "emb_int8_quantize",
-    # round-7 final: DSIR selection (two hashed-feature aggs + a
-    # broadcast-model scoring join) and the audio chunk dedup (the
-    # last pigeonhole-family modality bridge)
-    "pipeline_dsir_select",
-    "mm_audio_dedup",
-    # round-8 additions: the CCNet boilerplate strip (chunk-hash
-    # groupBy + doc reassembly — the heaviest new text transform), the
-    # full modern prep composition (clean → gopher-on-cleaned →
-    # keep-best), and the 4-layout LSH band sweep (the widest
-    # candidate-generation pass in the dedup family)
-    "pipeline_boilerplate_strip",
-    "pipeline_prep_full",
-    "dedup_minhash_band_sweep",
-    # round-9 additions: the incremental-dedup index consult (writes
-    # a real parquet signature index, then joins the increment in),
-    # the 16x1 containment pass (widest single-component candidate
-    # domain + exact intersections), the hashed 5-gram LM (4
-    # broadcast count tables over one posexplode stream), the
-    # two-step BPE trainer (vocab-sized argmax + fold + recount), and
-    # the cross-modal LSH retrieval join (multiprobe + exact rescore
-    # + brute-force baseline)
-    "dedup_incremental",
-    "dedup_containment",
-    "text_kenlm_proxy",
-    "corpus_bpe_merge2",
-    "mm_text_image_pairs",
-    # round-9 second wave: the deflated second principal component
-    # (two fenced iterates over the d2 relation), the three new tuning
-    # sweeps (simhash radius / minhash signature length — both carry
-    # exact-Jaccard verification on bucketed candidate domains — and
-    # the market-basket pair miner), the incremental decontamination
-    # index consult, and the scene-cut lag-window path
-    "emb_pca2_deflate",
-    "dedup_simhash_sweep",
-    "dedup_minhash_k_sweep",
-    "tpch_basket_pairs",
-    "pipeline_contamination_incremental",
-    "mm_scene_cuts",
-    # round-10 additions: the index write-back + compaction lifecycle
-    # (two generation writes + a fold + the resolved re-read), the BPE
-    # serving pass (corpus explode + vocab-sized 3-merge chain +
-    # co-keyed encode join), the two-iteration host PageRank (co-keyed
-    # contribution joins + one-row dangling scalars), the rank-weighted
-    # quality composition (gopher scan × broadcast rank relation), the
-    # two-granularity span profile (16+64 word windows off one words
-    # array), and the matryoshka truncation eval (4 prefix cosines per
-    # pair off one materialized products array)
-    "dedup_index_update",
-    "corpus_bpe_encode",
-    "graph_pagerank2_fixed",
-    "pipeline_rank_quality",
-    "pipeline_span_dedup2",
-    "emb_matryoshka_eval",
-    # round-11 additions: the span-dedup removal transform (interval
-    # union consumed as a removal mask + per-doc reassembly), the IVF
-    # tombstone compaction execute (partitioned index write + dynamic
-    # partition overwrite + physical re-read), the warm 2-step
-    # codebook re-fit (two fenced assignment relations + per-cell
-    # objective deltas), the weighted+personalized PageRank (count
-    # groupBy edges + Laplace teleport), the prep-weights sampler
-    # (full prep_weights composition + hash-unit rounding), and the
-    # hot-cell bisecting split (hot-member groupBy + ≤2k broadcast
-    # re-assign)
-    "pipeline_span_scrub",
-    "ann_ivf_compact",
-    "ann_ivf_refit_warm",
-    "graph_pagerank2_weighted",
-    "pipeline_sample_weighted",
-    "ann_ivf_split",
-    # round-12 additions: the full maintained-index lifecycle + search
-    # (codebook write + compact + physical split/merge + probe-routed
-    # scan — the heaviest new composition), cluster-bucketed SemDeDup
-    # (within-cell pair join + components + keeper window), its
-    # incremental consult variant, the All-But-The-Top postprocessing
-    # pass and the isotropy dial (both ride the d2 covariance explode),
-    # and the 2-round label-propagation communities
-    "ann_ivf_search_maintained",
-    "dedup_semdedup",
-    "dedup_semdedup_increment",
-    "emb_abtt",
-    "emb_isotropy",
-    "graph_community_labelprop",
-    "pipeline_nb_quality",
-    # round-13 additions (VERDICT r12 Next 8: the unbenched sweep's
-    # worst offenders, optimized this round and now held to budget):
-    # the exact O(N²) pair baseline (interpreted HOF fold → Arrow/
-    # NumPy exact left-fold, 21.7 → 1.7 s), the 2-iteration HITS
-    # (bounded-domain driver algebra like pagerank2), and the 3-family
-    # statsd flush union (shared-parse fence)
-    "dedup_embedding",
-    "graph_hits2_fixed",
-    "statsd_flush_all",
-]
+
+def _inputs(spark) -> dict[str, dict]:
+    """Per-table rows and bytes (parquet count() reads footers only),
+    so a budget violation caused by regenerated data shows as data."""
+    from pyspark.sql import functions as F
+
+    out = {}
+    for t in ("lineitem", "orders", "events", "documents", "embeddings"):
+        p = Path(SF_DIR) / f"{t}.parquet"
+        if p.exists():
+            files = [p] if p.is_file() else list(p.rglob("*.parquet"))
+            out[t] = {"rows": spark.read.parquet(str(p)).count(),
+                      "bytes": sum(f.stat().st_size for f in files)}
+    if "documents" in out:
+        out["documents"]["text_chars"] = spark.read.parquet(
+            f"{SF_DIR}/documents.parquet"
+        ).agg(F.sum(F.length("text"))).collect()[0][0]
+    return out
+
+
+def _read(name: str) -> dict:
+    try:
+        return json.loads((REPO / name).read_text())
+    except (OSError, json.JSONDecodeError):
+        return {}
 
 
 def main() -> None:
+    from tgres_spark import measure
     from tgres_spark.session import get_spark
 
     import __spark_entry__ as e
 
-    # contention provenance, sampled BEFORE the session spins up (a
-    # sample at the end would mostly measure the bench's own 32
-    # threads): round-6 showed a median 1.23x phantom inflation from
-    # driver-box load (verified gone on an idle re-run) — recording
-    # pre-run 1-min loadavg + process count lets a consumer tell
-    # contention from regression without a re-run.
-    try:
-        load1 = round(os.getloadavg()[0], 2)
-    except OSError:
-        load1 = None
-    try:
-        n_pids = sum(1 for p in os.listdir("/proc") if p.isdigit())
-    except OSError:
-        n_pids = None
-
-    # hypervisor-steal provenance (round 12): this box measures ~0%
-    # steal idle but ~9% (and varying) under full 32-core load — a
-    # noisy-neighbor effect that inflates random per-key timings
-    # 1.3-3x between otherwise idle runs (measured: two back-to-back
-    # idle benches flagged DISJOINT violation sets). Sampling
-    # /proc/stat at start and end turns that into data: steal_pct is
-    # the steal share of non-idle CPU over the WHOLE bench window, so
-    # a consumer can tell host contention from regression.
-    def _cpu_sample():
-        try:
-            f = open("/proc/stat").readline().split()
-            return [int(x) for x in f[1:]]
-        except (OSError, ValueError):
-            return None
-
-    def _steal_pct(c0, c1):
-        # ADVICE r12: busy excludes idle (d[3]) AND iowait (d[4]), and
-        # stops before the guest fields (already folded into user/nice
-        # on Linux, so summing them double-counts); the length guard
-        # runs BEFORE any indexing so a truncated /proc/stat line can't
-        # IndexError outside _cpu_sample's try/except.
-        if not (c0 and c1) or min(len(c0), len(c1)) < 8:
-            return None
-        d = [y - x for x, y in zip(c0[:8], c1[:8])]
-        busy = sum(d) - d[3] - d[4]
-        if busy <= 0:
-            return None
-        return round(100.0 * d[7] / busy, 2)
-
-    cpu0 = _cpu_sample()
+    # contention provenance, sampled before the session starts
+    load1 = round(os.getloadavg()[0], 2)
+    n_pids = sum(1 for p in os.listdir("/proc") if p.isdigit())
+    cpu0 = measure.cpu_sample()
 
     spark = get_spark("tgres_spark_bench")
     qs = e.queries()
 
-    # input-volume fingerprint: the driver regenerates testdata
-    # between rounds, and a budget frozen on the OLD data stops
-    # describing the workload (round 8: mm_video_keyframes/
-    # mm_audio_dedup "regressed" 1.3x purely because regenerated
-    # documents.parquet grew their synthesized media payloads).
-    # Recording per-table rows + on-disk bytes (parquet count() is
-    # footer-metadata-only — no scan) plus the documents text volume
-    # (the one column the mm/text synthesizers key off) makes a
-    # data-drift violation self-adjudicating: compare `inputs` across
-    # BENCH_r*.json before blaming the code.
-    inputs: dict[str, dict] = {}
-    for t in ("lineitem", "orders", "events", "documents", "embeddings"):
-        p = Path(SF_DIR) / f"{t}.parquet"
-        if not p.exists():
-            continue
-        files = [p] if p.is_file() else list(p.rglob("*.parquet"))
-        df = spark.read.parquet(str(p))
-        inputs[t] = {
-            "rows": df.count(),
-            "bytes": sum(f.stat().st_size for f in files),
-        }
-    if "documents" in inputs:
-        from pyspark.sql import functions as F
+    def build(k):
+        return qs[k](spark, SF_DIR)
 
-        inputs["documents"]["text_chars"] = (
-            spark.read.parquet(f"{SF_DIR}/documents.parquet")
-            .agg(F.sum(F.length("text")))
-            .collect()[0][0]
-        )
-    # warmup: one untimed pass over EVERY benchmarked query — JIT
-    # compilation keeps improving for several executions (measured on
-    # the flagship: 4.4s cold → 1.2s by the 6th run), and a single
-    # warmup query leaves the first timed queries paying the
-    # compiler's bill. Steady-state is what the timings claim.
-    for name in BENCH_QUERIES:
-        spark.catalog.clearCache()
-        qs[name](spark, SF_DIR).count()
-
-    timings: dict[str, float] = {}
-    # per-key steal provenance (resumed round 13): steal on this box is
-    # partly SELF-INDUCED — a 32-thread sustained spin measures 5-15%
-    # steal while 8/16/24/30 threads measure ~0% in the same window
-    # (hypervisor entitlement ~30-31 of 32 vCPUs), and co-tenant storms
-    # land on top of that floor. Whole-run steal can't say WHICH keys a
-    # storm hit and the retry pass is capped, so each key's timed window
-    # (all RUNS, sampled outside the timers) records its own steal share:
-    # every violation self-adjudicates even past the retry cap.
-    queries_steal: dict[str, float | None] = {}
-    total = 0.0
-    RUNS = 3  # best-of-N: single-shot timings swing 20-40% run-to-run
-    # on this shared box (measured on UNCHANGED queries; round-5 saw
-    # uniform 1.2-1.4x inflation on untouched queries between runs an
-    # hour apart); the minimum is the standard low-noise estimator
-    # for compute-bound work, and the JSON records runs/estimator.
-    for name in BENCH_QUERIES:
-        best, n = float("inf"), 0
-        k0 = _cpu_sample()
-        for _ in range(RUNS):
-            # persisted intermediates (minhash signatures, multi-RRA
-            # pts) must not shadow the next run's plan: CacheManager
-            # matches canonical plans, so a stale cache silently
-            # rewires later queries and the timing stops measuring the
-            # query itself (round-2 bench drifted 1.3-1.7x on
-            # UNCHANGED queries).
-            spark.catalog.clearCache()
-            t0 = time.time()
-            n = qs[name](spark, SF_DIR).count()
-            best = min(best, time.time() - t0)
-        queries_steal[name] = _steal_pct(k0, _cpu_sample())
-        timings[name] = round(best, 3)
-        total += best
-        print(f"# {name}: {best:.2f}s ({n} rows, steal "
-              f"{queries_steal[name]})", file=sys.stderr)
+    inputs = _inputs(spark)
+    measure.warmup(spark, build, measure.BENCH_QUERIES)
+    timed = {k: measure.time_key(spark, build, k)
+             for k in measure.BENCH_QUERIES}
+    timings = {k: sec for k, (sec, _) in timed.items()}
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    sf_num = float(sf) if sf.replace(".", "").isdigit() else None
-    # internal regression gate: BENCH_BUDGET.json freezes a known-good
-    # round's per-query times; any query beyond tolerance×budget is
-    # flagged LOUDLY here (stderr + JSON) so a perf regression is
-    # caught the round it lands, not by judge diff. The gate only
-    # fires when this run's SF matches the budget file's SF — budgets
-    # are meaningless at other scales, so mismatched-SF runs emit no
-    # violations (round-6 ADVICE: the old code flagged regardless).
-    budget_violations: dict[str, str] = {}
-    # median ratio across ALL budgeted keys: the one number that
-    # separates a real regression (one key violating while the median
-    # sits at ~1.0) from a box-level throughput shift (everything
-    # uniformly inflated — round 6 measured 1.23x from driver-box
-    # contention, and round 7 measured a persistent 1.3x on an IDLE
-    # box with zero hypervisor steal across three runs). Violations
-    # should be read AGAINST this: key_ratio >> median = code;
-    # median >> 1 with uniform ratios = environment.
-    budget_median_ratio: float | None = None
-    try:
-        bud = json.loads(
-            (Path(__file__).resolve().parent / "BENCH_BUDGET.json").read_text()
-        )
-        tol = float(bud.get("tolerance", 1.5))
-        if bud.get("sf") == sf_num:
-            ratios = sorted(
-                timings[k] / b
-                for k, b in (bud.get("queries") or {}).items()
-                if k in timings and b
-            )
-            if ratios:
-                mid = len(ratios) // 2
-                budget_median_ratio = round(
-                    ratios[mid]
-                    if len(ratios) % 2
-                    else (ratios[mid - 1] + ratios[mid]) / 2,
-                    3,
-                )
-            # a violation needs BOTH the relative tolerance and an
-            # absolute margin: sub-second keys swing 25%+ run-to-run
-            # from scheduling noise alone (measured: 2-6 spurious
-            # flags per run at median_ratio ~1.0), and a +0.15s floor
-            # silences exactly those while a real regression on any
-            # key that matters clears both bars.
-            margin = float(bud.get("abs_margin_s", 0.15))
-            for k, b in (bud.get("queries") or {}).items():
-                if (
-                    k in timings and b
-                    and timings[k] > tol * b
-                    and timings[k] - b > margin
-                ):
-                    budget_violations[k] = (
-                        f"{timings[k]:.3f}s > {tol:g}x budget {b:.3f}s"
-                    )
-                    print(f"# BUDGET-EXCEEDED {k}: {budget_violations[k]}",
-                          file=sys.stderr)
-    except (OSError, json.JSONDecodeError, ValueError):
-        pass
-    # the within-2x-of-baseline gate: BASELINE.json publishes the gate
-    # definition but (as of round 4) no numeric timings — emit the
-    # per-query ratios when numbers appear, else say so explicitly.
-    vs_baseline: dict | str = "no numeric timings in BASELINE.json"
-    try:
-        base = json.loads(
-            (Path(__file__).resolve().parent / "BASELINE.json").read_text()
-        )
-        base_q = base.get("queries") or {}
-        if base_q:
-            vs_baseline = {
-                k: round(timings[k] / base_q[k], 3)
-                for k in timings
-                if base_q.get(k)
-            }
-    except (OSError, json.JSONDecodeError):
-        pass
-    # quiet-retry adjudication (optimization round 13, VERDICT r12 Next
-    # 6): steal on this box lands on RANDOM key subsets mid-bench, so a
-    # violation flagged during a stolen window often vanishes when the
-    # key runs alone minutes later. Re-profile each violated key in
-    # isolation (bench protocol: clearCache + best-of-RUNS) with its own
-    # steal sample, and emit BOTH numbers — the run self-adjudicates
-    # without a full re-bench. Purely additive: timings/queries keep the
-    # main-loop numbers; the retry is extra evidence, never a substitute.
-    violations_retry: dict[str, dict] = {}
-    # cap the retry pass (worst offenders first) so a heavily-stolen
-    # window can't stretch the bench by an unbounded retry tail
-    def _viol_ratio(k: str) -> float:
-        try:  # "13.066s > 1.25x budget 5.847s" -> 13.066 / 5.847
-            s = budget_violations[k]
-            return float(s.split("s >")[0]) / float(s.rsplit("budget ", 1)[1].rstrip("s"))
-        except (ValueError, IndexError):
-            return 0.0
+    sf = float(sf) if sf.replace(".", "").isdigit() else sf
+    key = {"sf": sf, "cpus": spark.sparkContext.defaultParallelism,
+           "materialize": measure.MATERIALIZE}
+    gate = measure.judge(timings, _read("BENCH_BUDGET.json"), key)
+    viol = gate["budget_violations"]
+    for k, r in viol.items():
+        print(f"# BUDGET-EXCEEDED {k}: {r}x budget", file=sys.stderr)
+    if gate["budget_mismatch"]:
+        print(f"# BUDGET-MISMATCH {gate['budget_mismatch']}", file=sys.stderr)
+    base_q = _read("BASELINE.json").get("queries") or {}
+    vs_baseline = {k: round(timings[k] / base_q[k], 3)
+                   for k in timings if base_q.get(k)}
+    retry = {}
+    for k in sorted(viol, key=viol.get, reverse=True)[:16]:
+        sec, steal = measure.time_key(spark, build, k)
+        retry[k] = {"sec": sec, "cpu_steal_pct": steal}
 
-    # cap 16: this session measured a 37%-steal window flagging 18
-    # keys at once with 8 of them unretried — 16 covers a whole-storm
-    # run (every retry is 1-3 s quiet) while still bounding the tail
-    _retry_keys = sorted(budget_violations, key=_viol_ratio, reverse=True)[:16]
-    for name in _retry_keys:
-        r0 = _cpu_sample()
-        best = float("inf")
-        for _ in range(RUNS):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            qs[name](spark, SF_DIR).count()
-            best = min(best, time.time() - t0)
-        violations_retry[name] = {
-            "sec": round(best, 3),
-            "cpu_steal_pct": _steal_pct(r0, _cpu_sample()),
-        }
-        print(f"# RETRY {name}: {best:.2f}s "
-              f"(steal {violations_retry[name]['cpu_steal_pct']})",
-              file=sys.stderr)
-    cpu1 = _cpu_sample()
-    steal_pct = _steal_pct(cpu0, cpu1)
-    out_json = json.dumps(
-        {
-            "metric": "headline_total",
-            "value": round(total, 3),
-            "unit": "sec",
-            "queries": timings,
-            "sf": sf_num if sf_num is not None else sf,
-            "loadavg_1m": load1,
-            "n_pids": n_pids,
-            "cpu_steal_pct": steal_pct,
-            # estimator provenance: per-query timings are the MIN
-            # of `runs` executions (cache cleared between runs) —
-            # consumers comparing to single-shot rounds (r1/r2)
-            # or a single-shot baseline can see the difference.
-            "runs": RUNS,
-            "estimator": "min",
-            "vs_baseline": vs_baseline,
-            "budget_violations": budget_violations,
-            "violations_retry": violations_retry,
-            # per-key steal share over each key's whole timed window
-            # (additive provenance: lets any consumer adjudicate a
-            # violation the retry cap didn't reach)
-            "queries_steal": queries_steal,
-            "budget_median_ratio": budget_median_ratio,
-            "inputs": inputs,
-        }
-    )
-    # VERDICT r12 Next 7: round 11's one-line JSON was truncated in the
-    # driver's output capture, nulling the whole round-over-round
-    # comparison. Persist the identical JSON to BENCH_SELF.json BEFORE
-    # printing (so a capture failure can never lose it) and flush the
-    # stdout line explicitly.
+    out_json = json.dumps({
+        "metric": "headline_total",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        **key,
+        "loadavg_1m": load1,
+        "n_pids": n_pids,
+        "cpu_steal_pct": measure.steal_pct(cpu0, measure.cpu_sample()),
+        "runs": measure.RUNS,
+        "estimator": "min",
+        "vs_baseline": vs_baseline or "no numeric timings in BASELINE.json",
+        "violations_retry": retry,
+        "queries_steal": {k: steal for k, (_, steal) in timed.items()},
+        "inputs": inputs,
+        **gate,
+    })
+    # written before printing, so a lost stdout capture loses nothing
     try:
-        (Path(__file__).resolve().parent / "BENCH_SELF.json").write_text(
-            out_json + "\n"
-        )
+        (REPO / "BENCH_SELF.json").write_text(out_json + "\n")
     except OSError:
         pass
     print(out_json, flush=True)

@@ -884,9 +884,9 @@ def test_attribution_stream_credits_cross_batch_conversion(spark, tmp_path):
     latest snapshot still credits it (a stateless per-batch twin
     structurally cannot). Final snapshot == batch attribution_relation
     over all events; lookback exclusion still applies."""
-    from tgres_spark.streaming.attribution import (
+    from tgres_spark.streaming.refresh import (
         read_latest_snapshot,
-        run_attribution_stream,
+        run_cumulative_refresh,
     )
     from tgres_spark.tpch import attribution_relation
 
@@ -914,9 +914,9 @@ def test_attribution_stream_credits_cross_batch_conversion(spark, tmp_path):
         "append"
     ).parquet(in_dir)
     allev = spark.createDataFrame(touches + convs, schema)
-    run_attribution_stream(
+    run_cumulative_refresh(
         spark, in_dir, str(tmp_path / "out"), str(tmp_path / "ck"),
-        allev.schema, files_per_trigger=1,
+        allev.schema, attribution_relation, files_per_trigger=1,
     )
     got = {
         r["channel"]: (r["n_first"], r["n_last"], r["linear_credit"])

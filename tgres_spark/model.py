@@ -34,6 +34,17 @@ def load_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
+def workdir(spark: SparkSession, prefix: str) -> str:
+    """A fresh directory for a query's staged input, checkpoint and
+    sink files, made inside the session's own temp dir. Spark made
+    that dir with ``Utils.createTempDir``, so its shutdown hook deletes
+    it, and everything in it, when the JVM exits. The returned frames
+    read these files lazily, so nothing may delete them earlier."""
+    import tempfile
+
+    return tempfile.mkdtemp(prefix=prefix, dir=spark.sparkContext._temp_dir)
+
+
 def series_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet → SeriesFrame: event_type is the series name.
 

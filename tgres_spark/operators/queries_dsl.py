@@ -10,7 +10,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..model import EVENTS_SERIES_SQL, NAME, T, VALUE, series_from_events
+from ..model import (
+    EVENTS_SERIES_SQL, NAME, T, VALUE, series_from_events, workdir,
+)
 from ..registry import register
 from . import dsl_calculate as dc
 from . import dsl_combine as db
@@ -581,11 +583,9 @@ def _streaming_anomaly(spark, sf_dir):
     exactly), so it shares events_anomaly's DuckDB oracle; cross-batch
     state carry with time-ordered drops is pinned in
     tests/test_streaming.py."""
-    import tempfile
-
     from ..streaming.anomaly import run_anomaly_stream
 
-    work = tempfile.mkdtemp(prefix="tgres_sanom_")
+    work = workdir(spark, "tgres_sanom_")
     b = base(spark, sf_dir)
     b.coalesce(4).write.mode("overwrite").parquet(f"{work}/in")
     run_anomaly_stream(

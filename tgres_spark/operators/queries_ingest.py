@@ -20,7 +20,9 @@ from ..aggregator import (
     paced_metrics_sql,
     statsd_flush,
 )
-from ..model import EVENTS_SERIES_SQL, epoch_s, load_table, series_from_events
+from ..model import (
+    EVENTS_SERIES_SQL, epoch_s, load_table, series_from_events, workdir,
+)
 from ..pipeline import dedup as dd_sql
 from ..registry import register
 from ..sources.graphite import parse_graphite_lines, parse_graphite_lines_sql
@@ -229,11 +231,9 @@ def streaming_ingest_pipeline(spark, sf_dir):
     seconds). The SQL mirrors the (start, end]-aligned slot label and
     the micro6 average. Multi-batch watermark behavior (late-row
     drops, incremental emission) is pinned in tests/test_streaming.py."""
-    import tempfile
-
     from ..streaming.ingest import run_file_pipeline
 
-    work = tempfile.mkdtemp(prefix="tgres_stream_")
+    work = workdir(spark, "tgres_stream_")
     in_dir = f"{work}/in"
     out_dir = f"{work}/out"
     import os
@@ -275,11 +275,10 @@ def streaming_paced_metric(spark, sf_dir):
     and the sentinel-flush behavior stay pinned in the streaming
     tests."""
     import os
-    import tempfile
 
     from ..streaming.paced import run_paced_file_pipeline
 
-    work = tempfile.mkdtemp(prefix="tgres_paced_")
+    work = workdir(spark, "tgres_paced_")
     in_dir = f"{work}/in"
     out_dir = f"{work}/out"
     os.makedirs(in_dir)
@@ -386,11 +385,9 @@ def streaming_name_catalog(spark, sf_dir):
     semantics the fold adds beyond that SQL — first_seen pinned by the
     creating batch, replay idempotency, snapshot/manifest rotation —
     are pinned separately in tests/test_streaming.py."""
-    import tempfile
-
     from ..streaming.catalog import read_catalog, run_catalog_pipeline
 
-    work = tempfile.mkdtemp(prefix="tgres_cat_")
+    work = workdir(spark, "tgres_cat_")
     in_dir = f"{work}/in"
     lines = graphite_lines(spark, sf_dir)
     lines.coalesce(4).write.mode("overwrite").text(in_dir)
@@ -412,12 +409,10 @@ def streaming_dedup_incremental(spark, sf_dir):
     appended output re-read. Oracle: the full-corpus LSH rerun
     filtered to cross pairs (a doc's matches depend only on its own
     text and the static index, so batching is invisible)."""
-    import tempfile
-
     from ..pipeline import dedup as dd_mod
     from ..streaming.incdedup import run_incdedup_stream
 
-    work = tempfile.mkdtemp(prefix="tgres_sinc_")
+    work = workdir(spark, "tgres_sinc_")
     docs = load_table(spark, sf_dir, "documents")
     m = F.col("doc_id") % dd_mod.INCREMENT_MOD
     dd_mod.minhash_signatures(docs.where(m != 0)).write.mode(
@@ -442,24 +437,24 @@ def streaming_dedup_incremental(spark, sf_dir):
 )
 def streaming_attribution(spark, sf_dir):
     """Cumulative-refresh attribution over a live event stream (round
-    9, streaming/attribution.py): attribution is not per-batch
+    9, streaming/refresh.py): attribution is not per-batch
     decomposable (a touch's conversion may arrive later), so each
     micro-batch lands its raw events idempotently and republishes the
     FULL relation as a numbered snapshot — the latest snapshot always
     equals the batch operator over everything seen, which is exactly
     what the batch oracle checks. Four real micro-batches over the
     events table, then the latest snapshot re-read."""
-    import tempfile
-
-    from ..streaming.attribution import (
-        read_latest_snapshot, run_attribution_stream,
+    from ..streaming.refresh import (
+        read_latest_snapshot, run_cumulative_refresh,
     )
+    from ..tpch import attribution_relation
 
-    work = tempfile.mkdtemp(prefix="tgres_sattr_")
+    work = workdir(spark, "tgres_sattr_")
     ev = load_table(spark, sf_dir, "events")
     ev.coalesce(4).write.mode("overwrite").parquet(f"{work}/in")
-    run_attribution_stream(
-        spark, f"{work}/in", f"{work}/out", f"{work}/ckpt", ev.schema
+    run_cumulative_refresh(
+        spark, f"{work}/in", f"{work}/out", f"{work}/ckpt", ev.schema,
+        attribution_relation,
     )
     return read_latest_snapshot(spark, f"{work}/out")
 
@@ -476,17 +471,22 @@ def streaming_attribution_delta(spark, sf_dir):
     is per-user decomposable, so the full cumulative recompute is
     unnecessary work (refresh.py's three-class deployment rule).
     Four real micro-batches, latest snapshot re-read."""
-    import tempfile
-
-    from ..streaming.attribution import (
-        read_latest_snapshot, run_attribution_delta_stream,
+    from ..streaming.refresh import (
+        read_latest_snapshot, run_delta_refresh,
     )
+    from ..tpch import attribution_rollup, attribution_user_relation
 
-    work = tempfile.mkdtemp(prefix="tgres_sattrd_")
+    work = workdir(spark, "tgres_sattrd_")
     ev = load_table(spark, sf_dir, "events")
     ev.coalesce(4).write.mode("overwrite").parquet(f"{work}/in")
-    run_attribution_delta_stream(
-        spark, f"{work}/in", f"{work}/out", f"{work}/ckpt", ev.schema
+    run_delta_refresh(
+        spark, f"{work}/in", f"{work}/out", f"{work}/ckpt", ev.schema,
+        attribution_user_relation, "user_id",
+        publish_fn=attribution_rollup,
+        # fold the raw landing every 3 generations so the per-batch
+        # history listing stays bounded by the fold cadence instead of
+        # growing with total batch count
+        raw_compact_every=3,
     )
     return read_latest_snapshot(spark, f"{work}/out")
 
@@ -505,14 +505,12 @@ def streaming_funnel_delta(spark, sf_dir):
     ago without re-reading anyone else's history; publish = the
     3-count rollup; same batch oracle verbatim. Four real
     micro-batches, latest snapshot re-read."""
-    import tempfile
-
     from ..streaming.refresh import (
         read_latest_snapshot, run_delta_refresh,
     )
     from ..tpch import funnel_rollup, funnel_user_relation
 
-    work = tempfile.mkdtemp(prefix="tgres_sfun_")
+    work = workdir(spark, "tgres_sfun_")
     ev = load_table(spark, sf_dir, "events")
     ev.coalesce(4).write.mode("overwrite").parquet(f"{work}/in")
     run_delta_refresh(
@@ -537,14 +535,12 @@ def streaming_rfm(spark, sf_dir):
     and the latest snapshot equals the batch operator over everything
     seen (the batch SQL is the oracle verbatim). Four real
     micro-batches over the events table, latest snapshot re-read."""
-    import tempfile
-
     from ..streaming.refresh import (
         read_latest_snapshot, run_cumulative_refresh,
     )
     from ..tpch import rfm_relation
 
-    work = tempfile.mkdtemp(prefix="tgres_srfm_")
+    work = workdir(spark, "tgres_srfm_")
     ev = load_table(spark, sf_dir, "events")
     ev.coalesce(4).write.mode("overwrite").parquet(f"{work}/in")
     run_cumulative_refresh(
@@ -575,12 +571,10 @@ def streaming_index_update(spark, sf_dir):
     invisible because a doc's signature depends only on its own
     text. gen is deliberately not returned: which batch carried a doc
     is file-split plumbing, not operator semantics."""
-    import tempfile
-
     from ..pipeline.dedup import read_signature_index
     from ..streaming.incdedup import run_index_update_stream
 
-    work = tempfile.mkdtemp(prefix="tgres_sidx_")
+    work = workdir(spark, "tgres_sidx_")
     docs = load_table(spark, sf_dir, "documents")
     docs.coalesce(4).write.mode("overwrite").parquet(f"{work}/in")
     run_index_update_stream(
@@ -613,14 +607,13 @@ def streaming_prep_increment(spark, sf_dir):
     import glob
     import os
     import shutil
-    import tempfile
     import time
 
     from ..pipeline.contamination import contamination_index
     from ..pipeline.dedup import INCREMENT_MOD, dedup_index_update
     from ..streaming.incdedup import run_prep_increment_stream
 
-    work = tempfile.mkdtemp(prefix="tgres_sprep_")
+    work = workdir(spark, "tgres_sprep_")
     docs = load_table(spark, sf_dir, "documents")
     m = F.col("doc_id") % INCREMENT_MOD
     dedup_index_update(
@@ -694,13 +687,12 @@ def streaming_pack_increment(spark, sf_dir):
     import glob
     import os
     import shutil
-    import tempfile
     import time
 
     from ..pipeline import prep as pp
     from ..streaming.refresh import read_generations, run_generation_pack
 
-    work = tempfile.mkdtemp(prefix="tgres_spack_")
+    work = workdir(spark, "tgres_spack_")
     docs = load_table(spark, sf_dir, "documents")
     ids = sorted(r["doc_id"] for r in docs.select("doc_id").collect())
     n = len(ids)
@@ -751,12 +743,11 @@ def streaming_semdedup_increment(spark, sf_dir):
     import glob
     import os
     import shutil
-    import tempfile
     import time
 
     from ..streaming.incdedup import run_semdedup_increment_stream
 
-    work = tempfile.mkdtemp(prefix="tgres_ssem_")
+    work = workdir(spark, "tgres_ssem_")
     emb = load_table(spark, sf_dir, "embeddings")
     m = F.col("vec_id") % 5
     # generation 0: the corpus side of the index, cell-assigned
@@ -837,13 +828,12 @@ def streaming_ivf_search(spark, sf_dir):
     import glob
     import os
     import shutil
-    import tempfile
     import time
 
     from ..pipeline import similarity as sim
     from ..streaming.ivfsearch import run_ivf_search_stream
 
-    work = tempfile.mkdtemp(prefix="tgres_sivf_")
+    work = workdir(spark, "tgres_sivf_")
     emb = load_table(spark, sf_dir, "embeddings")
     sim.ann_ivf_index_write_full(spark, f"{work}/index", emb)
     sim.ann_ivf_compact_cells(spark, f"{work}/index")
@@ -891,14 +881,12 @@ def streaming_pagerank(spark, sf_dir):
     equals the batch operator over every doc seen, so the batch CTE
     oracle checks the stream verbatim. Four real micro-batches over
     the documents table."""
-    import tempfile
-
     from ..pipeline.graph import graph_pagerank2_fixed
     from ..streaming.refresh import (
         read_latest_snapshot, run_cumulative_refresh,
     )
 
-    work = tempfile.mkdtemp(prefix="tgres_spr_")
+    work = workdir(spark, "tgres_spr_")
     docs = load_table(spark, sf_dir, "documents")
     docs.coalesce(4).write.mode("overwrite").parquet(f"{work}/in")
     run_cumulative_refresh(
@@ -928,15 +916,13 @@ def streaming_catalog_compact(spark, sf_dir):
     catalog because the incarnations split by TIME: every name's
     earliest point lives in the first generation that saw it, so the
     cross-generation first_seen equals the global MIN(t)."""
-    import tempfile
-
     from ..streaming.catalog import (
         compact_catalog,
         read_catalog,
         run_catalog_pipeline,
     )
 
-    work = tempfile.mkdtemp(prefix="tgres_catc_")
+    work = workdir(spark, "tgres_catc_")
     ev = load_table(spark, sf_dir, "events").repartition(
         spark.sparkContext.defaultParallelism
     )
@@ -981,12 +967,10 @@ def streaming_dedup_exact(spark, sf_dir):
     order-independent state merges, so any batching of the input
     yields the identical keeper relation. Restart/resume semantics are
     pinned in tests/test_streaming.py."""
-    import tempfile
-
     from ..model import load_table
     from ..streaming.dedup import run_dedup_stream
 
-    work = tempfile.mkdtemp(prefix="tgres_sdedup_")
+    work = workdir(spark, "tgres_sdedup_")
     in_dir = f"{work}/in"
     out_dir = f"{work}/out"
     docs = load_table(spark, sf_dir, "documents")
@@ -1037,11 +1021,9 @@ def streaming_sessionize(spark, sf_dir):
     merges at delta == gap and emits at session_end == watermark).
     Cross-batch interval merging and kill/resume are pinned in
     tests/test_streaming.py with time-ordered file drops."""
-    import tempfile
-
     from ..streaming.sessionize import run_sessionize_stream
 
-    work = tempfile.mkdtemp(prefix="tgres_ssess_")
+    work = workdir(spark, "tgres_ssess_")
     ev = load_table(spark, sf_dir, "events")
     e = ev.select("user_id", epoch_s("ts", ev).alias("t"))
     e.coalesce(4).write.mode("overwrite").parquet(f"{work}/in")
@@ -1069,12 +1051,10 @@ def streaming_hll_distinct(spark, sf_dir):
     folds to the identical registers. Bounded state (<= 256 rows per
     group) is the point — exact streaming COUNT(DISTINCT) state grows
     with the key space."""
-    import tempfile
-
     from ..operators.sketch import hll_estimate
     from ..streaming.hll import run_hll_stream
 
-    work = tempfile.mkdtemp(prefix="tgres_shll_")
+    work = workdir(spark, "tgres_shll_")
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
     ev.coalesce(4).write.mode("overwrite").parquet(f"{work}/in")
     run_hll_stream(
@@ -1101,12 +1081,10 @@ def streaming_hist_quantiles(spark, sf_dir):
     oracle because + is order-independent. Completes the streaming
     sketch trilogy (count/min dedup, max HLL, sum histogram) — every
     mergeable-state family the 100 TB streaming story needs."""
-    import tempfile
-
     from ..operators.sketch import quantiles_from_bins
     from ..streaming.hll import run_histogram_stream
 
-    work = tempfile.mkdtemp(prefix="tgres_shist_")
+    work = workdir(spark, "tgres_shist_")
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     ev.coalesce(4).write.mode("overwrite").parquet(f"{work}/in")
     run_histogram_stream(
@@ -1138,11 +1116,9 @@ def streaming_interval_join(spark, sf_dir):
     emission is watermark-independent for on-time rows, so the
     availableNow run hash-matches a plain SQL self-join; the state
     bound, not the result, is what the streaming form buys at scale."""
-    import tempfile
-
     from ..streaming.join import run_interval_join_stream
 
-    work = tempfile.mkdtemp(prefix="tgres_sjoin_")
+    work = workdir(spark, "tgres_sjoin_")
     ev = load_table(spark, sf_dir, "events")
     e = ev.select("user_id", "event_type", epoch_s("ts", ev).alias("t"))
     e.coalesce(4).write.mode("overwrite").parquet(f"{work}/in")
@@ -1175,11 +1151,9 @@ def streaming_enrich_join(spark, sf_dir):
     holds any. Single availableNow batch ≡ {slots ≤ max(t) − 61}
     under the −1 s slot shift (the streaming_ingest_pipeline closed
     form); batch-equivalence pinned in tests/test_streaming.py."""
-    import tempfile
-
     from ..streaming.enrich import run_enrich_stream
 
-    work = tempfile.mkdtemp(prefix="tgres_senrich_")
+    work = workdir(spark, "tgres_senrich_")
     ev = load_table(spark, sf_dir, "events")
     e = ev.select(
         "user_id", epoch_s("ts", ev).alias("t"), F.col("value").cast("double")
@@ -1214,13 +1188,11 @@ def streaming_bloom_filter(spark, sf_dir):
     order-independent AND idempotent — the only sketch state where
     at-least-once replay is provably free (re-OR-ing a batch is a
     no-op), so exactly-once semantics need zero dedup bookkeeping."""
-    import tempfile
-
     from ..operators.sketch import bloom_membership
     from ..streaming.hll import run_bloom_stream
     from ..tpch import _bloom_probes_and_exact
 
-    work = tempfile.mkdtemp(prefix="tgres_sbloom_")
+    work = workdir(spark, "tgres_sbloom_")
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
     ev.coalesce(4).write.mode("overwrite").parquet(f"{work}/in")
     run_bloom_stream(
@@ -1247,12 +1219,10 @@ def streaming_cms_heavy_hitters(spark, sf_dir):
     mergeable sketch in the repo (histogram +, HLL max, CMS +) runs
     identically in batch and streaming form — the bounded-state
     frequency story at 100 TB (1024 counters however many keys)."""
-    import tempfile
-
     from ..operators.sketch import cms_estimate
     from ..streaming.hll import run_cms_stream
 
-    work = tempfile.mkdtemp(prefix="tgres_scms_")
+    work = workdir(spark, "tgres_scms_")
     ev = load_table(spark, sf_dir, "events").select("user_id")
     ev.coalesce(4).write.mode("overwrite").parquet(f"{work}/in")
     run_cms_stream(
@@ -1275,11 +1245,9 @@ def streaming_asof_enrich(spark, sf_dir):
     events_asof_join because a left row's match depends only on the
     static right side — any micro-batching appends the identical
     relation."""
-    import tempfile
-
     from ..model import epoch_s
 
-    work = tempfile.mkdtemp(prefix="tgres_sasof_")
+    work = workdir(spark, "tgres_sasof_")
     ev = load_table(spark, sf_dir, "events")
     e = ev.select(
         "event_id", "user_id", "event_type", "value",
@@ -1326,12 +1294,10 @@ def streaming_dsir_score(spark, sf_dir):
     path (dsir_scores_sql) because a doc's score depends only on its
     own text and the static model — any micro-batching appends the
     identical relation."""
-    import tempfile
-
     from ..pipeline.textstats import dsir_model_row
     from ..streaming.dsir import run_dsir_stream
 
-    work = tempfile.mkdtemp(prefix="tgres_sdsir_")
+    work = workdir(spark, "tgres_sdsir_")
     docs = load_table(spark, sf_dir, "documents")
     model = dsir_model_row(docs)
     crawl = docs.where(F.col("source") != "src0").select("doc_id", "text")
@@ -1357,12 +1323,10 @@ def streaming_oov_score(spark, sf_dir):
     no watermark, zero state. Hash-checks against the batch per-doc
     oracle (oov_doc_scores_sql) because each doc's stats depend only
     on its own text and the static vocab."""
-    import tempfile
-
     from ..pipeline.textstats import oov_vocab_row
     from ..streaming.oov import run_oov_stream
 
-    work = tempfile.mkdtemp(prefix="tgres_soov_")
+    work = workdir(spark, "tgres_soov_")
     docs = load_table(spark, sf_dir, "documents")
     vocab = oov_vocab_row(docs)
     scored = docs.where(F.col("doc_id") % 2 == 1).select(
@@ -1468,12 +1432,11 @@ def streaming_pixel_flush(spark, sf_dir):
     60s delay), so the SQL mirrors the slot label, the micro6 rate,
     and the cutoff."""
     import os
-    import tempfile
 
     from ..aggregator import pixel_agg_parsed
     from ..streaming.ingest import run_pixel_counter_pipeline
 
-    work = tempfile.mkdtemp(prefix="tgres_spixel_")
+    work = workdir(spark, "tgres_spixel_")
     os.makedirs(f"{work}/in", exist_ok=True)
     parsed = pixel_agg_parsed(pixel_commands(spark, sf_dir))
     parsed.coalesce(4).write.mode("overwrite").parquet(f"{work}/in")

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..model import load_table
+from ..model import load_table, workdir
 from ..pipeline import dedup as dd
 from ..pipeline import graph as _graph
 from ..pipeline import multimodal as mm
@@ -78,12 +78,10 @@ def _dedup_incremental_components(s, d):
     is shingled; the old corpus re-enters as one (doc, root) edge per
     doc. Identical relation to dedup_components by the
     assignment-as-edges equivalence."""
-    import tempfile
-
     docs = _docs(s, d)
     m = F.col("doc_id") % dd.INCREMENT_MOD
     existing, increment = docs.where(m != 0), docs.where(m == 0)
-    work = tempfile.mkdtemp(prefix="tgres_dinc2_")
+    work = workdir(s, "tgres_dinc2_")
     dd.minhash_signatures(existing).write.mode("overwrite").parquet(
         f"{work}/index"
     )
@@ -105,11 +103,9 @@ def _dedup_index_update(s, d):
     from-parquet base. Oracle: the full-corpus signature rerun (the
     lifecycle's core equivalence), with per-row gen recording which
     wave brought each doc."""
-    import tempfile
-
     docs = _docs(s, d)
     m = F.col("doc_id") % dd.INCREMENT_MOD
-    work = tempfile.mkdtemp(prefix="tgres_idxup_")
+    work = workdir(s, "tgres_idxup_")
     dd.dedup_index_update(s, work, docs.where(m != 0), generation=0)
     dd.dedup_index_update(
         s, work, docs.where(m == 0), generation=1, compact_threshold=2
@@ -130,11 +126,9 @@ def _dedup_incremental(s, d):
     corpus). Oracle: a full-corpus LSH rerun filtered to pairs
     touching the increment (candidate membership is per-doc, so the
     two are identical relations)."""
-    import tempfile
-
     docs = _docs(s, d)
     m = F.col("doc_id") % dd.INCREMENT_MOD
-    work = tempfile.mkdtemp(prefix="tgres_dinc_")
+    work = workdir(s, "tgres_dinc_")
     dd.minhash_signatures(docs.where(m != 0)).write.mode(
         "overwrite"
     ).parquet(f"{work}/index")
@@ -181,9 +175,7 @@ def _ann_ivf_compact(s, d):
     the post-compaction parquet — proving exactly the tombstoned rows
     of the compacted cells left disk (pipeline/similarity.py
     ann_ivf_compact_cells)."""
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tgres_ivfc_")
+    work = workdir(s, "tgres_ivfc_")
     sim.ann_ivf_index_write(s, work, _emb(s, d))
     compacted = sim.ann_ivf_compact_cells(s, work)
     return sim.ann_ivf_compact_audit(s, work, compacted)
@@ -199,9 +191,7 @@ def _ann_ivf_search_maintained(s, d):
     through the maintained cache equal the chain on the surviving
     vectors (reference analogue: receiver/dscache.go:1 — reads always
     consult the maintained cache, never go around it)."""
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tgres_ivfm_")
+    work = workdir(s, "tgres_ivfm_")
     sim.ann_ivf_index_write_full(s, work, _emb(s, d))
     sim.ann_ivf_compact_cells(s, work)
     # split+merge as one maintenance transaction (r13): one codebook
@@ -374,11 +364,9 @@ def streaming_scene_cuts(spark, sf_dir):
     is the STATELESS foreachBatch shape — four real micro-batches,
     per-batch overwrite dirs, union re-read; the batch oracle checks
     the stream verbatim because micro-batching is invisible."""
-    import tempfile
-
     from ..streaming.mmcuts import run_scene_cut_stream
 
-    work = tempfile.mkdtemp(prefix="tgres_scuts_")
+    work = workdir(spark, "tgres_scuts_")
     docs = _docs(spark, sf_dir)
     docs.coalesce(4).write.mode("overwrite").parquet(f"{work}/in")
     run_scene_cut_stream(
@@ -637,14 +625,12 @@ def pipeline_contamination_incremental(spark, sf_dir):
     depend only on the doc's own grams + the benchmark set, so the
     relations are identical). pipeline/contamination.py
     contamination_incremental."""
-    import tempfile
-
     from ..pipeline.contamination import (
         contamination_incremental, contamination_index,
     )
 
     docs = _docs(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="tgres_cinc_")
+    work = workdir(spark, "tgres_cinc_")
     contamination_index(docs).write.mode("overwrite").parquet(
         f"{work}/bench_index"
     )
@@ -678,14 +664,12 @@ def pipeline_prep_increment(spark, sf_dir):
     (doc_id % 5 == 0, non-benchmark) flows through gopher gate +
     incremental decontamination + incremental dedup to one per-doc
     keep verdict. Only increment text is read at prep time."""
-    import tempfile
-
     from ..pipeline.contamination import contamination_index
     from ..pipeline.prep import prep_increment
 
     docs = _docs(spark, sf_dir)
     m = F.col("doc_id") % dd.INCREMENT_MOD
-    work = tempfile.mkdtemp(prefix="tgres_pinc_")
+    work = workdir(spark, "tgres_pinc_")
     dd.minhash_signatures(docs.where(m != 0)).write.mode(
         "overwrite"
     ).parquet(f"{work}/sig_index")

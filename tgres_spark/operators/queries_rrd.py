@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..model import EVENTS_SERIES_SQL, series_from_events
+from ..model import EVENTS_SERIES_SQL, series_from_events, workdir
 from ..registry import register
 from .consolidate import consolidate, oracle_consolidate_sql
 
@@ -117,11 +117,9 @@ def rrd_bucketed_consolidate(spark, sf_dir):
     consolidate runs with ZERO Exchange operators (pinned in
     tests/test_plans.py). Values are bit-identical to
     rrd_consolidate_wmean — same oracle."""
-    import tempfile
-
     from ..bucketed import read_bucketed_series, write_bucketed_series
 
-    path = tempfile.mkdtemp(prefix="tgres_bucketed_")
+    path = workdir(spark, "tgres_bucketed_")
     write_bucketed_series(
         series_from_events(spark, sf_dir),
         "tgres_series_bucketed",
@@ -156,12 +154,10 @@ def rrd_retention_prune(spark, sf_dir):
     job drops the aged-out day directories (metadata-only Hadoop-FS
     delete, no rewrite) and the re-read equals the span-windowed full
     rollup. Runs the prune TWICE to pin idempotence before reading."""
-    import tempfile
-
     from ..archive import materialize_archives, prune_archive
 
     sf = series_from_events(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="tgres_prune_")
+    root = workdir(spark, "tgres_prune_")
     materialize_archives(
         spark, sf, [("wmean", STEP)], root, base_step=10, partitioned=True
     )
@@ -187,12 +183,10 @@ def rrd_compact_archive(spark, sf_dir):
     per directory, compacted AGAIN to pin idempotence, and the re-read
     is hash-checked against the plain rollup oracle — same rows, same
     values, fewer files."""
-    import tempfile
-
     from ..archive import compact_archive
 
     sf = series_from_events(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="tgres_compact_")
+    root = workdir(spark, "tgres_compact_")
     path = f"{root}/wmean_{STEP}"
     rolled = consolidate(sf, STEP, cf="wmean")
     from pyspark.sql import functions as F

@@ -6,15 +6,27 @@ rewrites identical content, never appends twice), then (2) recomputes
 the FULL relation over everything landed and publishes it as
 ``snap/b<id>``. The LATEST snapshot always equals the batch operator
 over all input seen, so the batch oracle checks the streaming
-deployment verbatim. First extracted from streaming_attribution
-(streaming/attribution.py documents the shape's rationale and the
-incremental-state alternative); streaming_rfm is the second instance —
-RFM segments depend on corpus means and the corpus max timestamp, so
-a purchase arriving in batch N can flip segment letters assigned in
-batch N−1, exactly the cross-batch dependency per-batch processing
-cannot express. Reference analogue: the aggregator's flush-cycle
-republish (aggregator.go) — recompute the published view each cycle
-from accumulated input."""
+deployment verbatim. A replayed batch rewrites byte-identical raw
+content, and only the highest-numbered snapshot is published, so a
+replay's transient snapshot can't be observed (read_latest_snapshot).
+
+First extracted from streaming_attribution. Multi-touch attribution
+is NOT per-batch decomposable: a touch's credit depends on a
+conversion that may arrive in a LATER batch (the forward-min window
+looks ahead), so a stateless per-batch twin would be wrong by
+construction. At production scale the recompute is the per-refresh
+cost of a cumulative dashboard, bounded by one linear-in-events
+window job; an incremental variant would carry per-(user,
+pending-touch) state in applyInPandasWithState for strictly less
+re-read at strictly more state-management complexity. Attribution is
+per-USER decomposable, though, so streaming_attribution_delta runs it
+through run_delta_refresh below. streaming_rfm is the second
+cumulative instance: RFM segments depend on corpus means and the
+corpus max timestamp, so a purchase arriving in batch N can flip
+segment letters assigned in batch N−1, exactly the cross-batch
+dependency per-batch processing cannot express. Reference analogue:
+the aggregator's flush-cycle republish (aggregator.go) — recompute
+the published view each cycle from accumulated input."""
 
 from __future__ import annotations
 

@@ -1102,7 +1102,7 @@ def attribution_rollup(urel: DataFrame) -> DataFrame:
     """Channel relation from the per-user relation: exact-integer
     partial sums fold associatively, so rollup(user_relation) ≡ the
     one-shot channel aggregate — the algebra the per-user delta
-    refresh (streaming/attribution.py) publishes through."""
+    refresh (streaming/refresh.py) publishes through."""
     return urel.groupBy("channel").agg(
         F.sum("n_first").cast("bigint").alias("n_first"),
         F.sum("n_last").cast("bigint").alias("n_last"),

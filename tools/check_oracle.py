@@ -60,6 +60,39 @@ def frame_hash(cols, rows):
     return h.hexdigest()[:16]
 
 
+def duck_connect(sf_dir: str):
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def duck_rows(con, sql: str):
+    """(columns, rows) of the oracle. Fetched via pandas, NOT
+    fetchall(): the driver's gate goes through pandas/arrow, where
+    HUGEINT and nullable-int columns surface as float64. fetchall()
+    hides that class of mismatch (returns HUGEINT as Python int)."""
+    ddf = con.execute(sql).df()
+    dcols = list(ddf.columns)
+    return dcols, list(zip(*[ddf[c].tolist() for c in dcols], strict=True))
+
+
+def compare(scols, srows, dcols, drows) -> list[str]:
+    """Row count, column names, then the value hash; [] when equal."""
+    problems = []
+    if len(srows) != len(drows):
+        problems.append(f"rowcount {len(srows)} != {len(drows)}")
+    if sorted(scols) != sorted(dcols):
+        problems.append(f"cols {sorted(scols)} != {sorted(dcols)}")
+    if not problems:
+        hs, hd = frame_hash(scols, srows), frame_hash(dcols, drows)
+        if hs != hd:
+            problems.append(f"value hash {hs} != {hd}")
+    return problems
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("-k", default="", help="only keys containing this substring")
@@ -74,8 +107,6 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    import duckdb
-
     import __spark_entry__ as e
 
     if args.vanilla:
@@ -86,11 +117,7 @@ def main() -> int:
         from tgres_spark.session import get_spark
 
         spark = get_spark("check_oracle", shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'"
-        )
+    con = duck_connect(args.sf_dir)
 
     qs, sqls = e.queries(), e.oracle_sql()
     n_pass = n_fail = n_rows_only = 0
@@ -117,35 +144,21 @@ def main() -> int:
             n_rows_only += 1
             continue
         try:
-            # fetch via pandas, NOT fetchall(): the driver's gate goes
-            # through pandas/arrow, where HUGEINT and nullable-int
-            # columns surface as float64. fetchall() hides that class
-            # of mismatch (returns HUGEINT as Python int).
-            ddf = con.execute(sqls[key]).df()
-            dcols = list(ddf.columns)
-            drows = list(zip(*[ddf[c].tolist() for c in dcols], strict=True))
+            dcols, drows = duck_rows(con, sqls[key])
         except Exception as ex:  # noqa: BLE001
             print(f"FAIL  {key}: duckdb error: {ex}")
             n_fail += 1
             continue
-        problems = []
-        if len(srows) != len(drows):
-            problems.append(f"rowcount {len(srows)} != {len(drows)}")
-        if sorted(scols) != sorted(dcols):
-            problems.append(f"cols {sorted(scols)} != {sorted(dcols)}")
-        if not problems:
-            hs, hd = frame_hash(scols, srows), frame_hash(dcols, drows)
-            if hs != hd:
-                problems.append(f"value hash {hs} != {hd}")
-                if args.v:
-                    so = sorted(range(len(scols)), key=lambda i: scols[i])
-                    do = sorted(range(len(dcols)), key=lambda i: dcols[i])
-                    sset = {tuple(canon(r[i]) for i in so) for r in srows}
-                    dset = {tuple(canon(r[i]) for i in do) for r in drows}
-                    for r in list(sset - dset)[:3]:
-                        print(f"        spark-only: {r}")
-                    for r in list(dset - sset)[:3]:
-                        print(f"        duck-only:  {r}")
+        problems = compare(scols, srows, dcols, drows)
+        if args.v and problems and problems[-1].startswith("value hash"):
+            so = sorted(range(len(scols)), key=lambda i: scols[i])
+            do = sorted(range(len(dcols)), key=lambda i: dcols[i])
+            sset = {tuple(canon(r[i]) for i in so) for r in srows}
+            dset = {tuple(canon(r[i]) for i in do) for r in drows}
+            for r in list(sset - dset)[:3]:
+                print(f"        spark-only: {r}")
+            for r in list(dset - sset)[:3]:
+                print(f"        duck-only:  {r}")
         if problems:
             print(f"FAIL  {key}: {'; '.join(problems)} [{time.time()-t0:.1f}s]")
             n_fail += 1

@@ -1,12 +1,12 @@
 #!/usr/bin/env python3
-"""Per-query profiling harness for the optimization rounds.
+"""Per-query profiling harness.
 
-For each requested key: warm up once, time best-of-N with the bench
-protocol (clearCache + count()), and optionally dump the formatted
-physical plan to plans/<tag>/<key>_<suffix>.txt for the judge's plan
-audit. Runs on $SPARK_GRAFT_SF_DIR (default sf0.1) at
-local[$SPARK_GRAFT_CPUS], exactly like bench.py, so numbers are
-comparable to BENCH_r*.json entries.
+For each requested key: warm up once, then time it with the bench
+protocol (``tgres_spark/measure.py``: clearCache, best of N, full
+materialization through the noop sink), and optionally dump the
+formatted physical plan to plans/<tag>/<key>_<suffix>.txt. Runs on
+$SPARK_GRAFT_SF_DIR (default sf0.1) at local[$SPARK_GRAFT_CPUS], like
+bench.py, so numbers compare with BENCH_*.json entries.
 
 Usage:
   python tools/profile_query.py -k key1,key2 [--runs 3] \
@@ -16,9 +16,11 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import contextlib
+import io
+import json
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -36,69 +38,39 @@ def main() -> int:
     ap.add_argument("--no-warmup", action="store_true")
     args = ap.parse_args()
 
+    from tgres_spark import measure
     from tgres_spark.session import get_spark
 
     import __spark_entry__ as e
 
     keys = [k for k in args.keys.split(",") if k]
-    spark = get_spark("tgres_profile")
     qs = e.queries()
-    for k in keys:
-        if k not in qs:
-            print(f"!! unknown key {k}", file=sys.stderr)
-            return 2
+    unknown = [k for k in keys if k not in qs]
+    if unknown:
+        print(f"!! unknown keys {unknown}", file=sys.stderr)
+        return 2
+    spark = get_spark("tgres_profile")
+
+    def build(k):
+        return qs[k](spark, SF_DIR)
 
     if args.plans:
-        import contextlib
-        import io
-
         os.makedirs(args.plans, exist_ok=True)
         for k in keys:
             spark.catalog.clearCache()
-            df = qs[k](spark, SF_DIR)
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
+                build(k).explain("formatted")
             p = Path(args.plans) / f"{k}_{args.suffix}.txt"
             p.write_text(buf.getvalue())
             print(f"# plan -> {p}", file=sys.stderr)
 
     if not args.no_warmup:
-        for k in keys:
-            spark.catalog.clearCache()
-            qs[k](spark, SF_DIR).count()
-
-    def _cpu():
-        try:
-            f = open("/proc/stat").readline().split()
-            return [int(x) for x in f[1:9]]
-        except (OSError, ValueError):
-            return None
-
-    def _steal(c0, c1):
-        if not (c0 and c1) or min(len(c0), len(c1)) < 8:
-            return None
-        d = [y - x for x, y in zip(c0, c1)]
-        busy = sum(d) - d[3] - d[4]
-        return round(100.0 * d[7] / busy, 2) if busy > 0 else None
-
-    out, steals = {}, {}
-    for k in keys:
-        best, n = float("inf"), 0
-        c0 = _cpu()
-        for _ in range(args.runs):
-            spark.catalog.clearCache()
-            spark.sparkContext.setJobDescription(f"profile:{k}")
-            t0 = time.time()
-            n = qs[k](spark, SF_DIR).count()
-            best = min(best, time.time() - t0)
-        steals[k] = _steal(c0, _cpu())
-        out[k] = round(best, 3)
-        print(f"{k}: {best:.3f}s ({n} rows, steal {steals[k]})")
-    import json
-
+        measure.warmup(spark, build, keys)
+    timed = {k: measure.time_key(spark, build, k, args.runs) for k in keys}
     print(json.dumps({"loadavg": round(os.getloadavg()[0], 2),
-                      "timings": out, "steal_pct": steals}))
+                      "timings": {k: t[0] for k, t in timed.items()},
+                      "steal_pct": {k: t[1] for k, t in timed.items()}}))
     return 0
 
 

@@ -1,17 +1,17 @@
 #!/usr/bin/env python3
-"""Re-freeze BENCH_BUDGET.json from two bench.py runs (round 12).
+"""Re-freeze BENCH_BUDGET.json from two bench.py runs.
 
-Per the CLAUDE.md freeze protocol: budgets describe bench.py's own
-measurement context, and GROWING the bench list changes that context
-(JIT code-cache pressure inflates hot existing keys — r10 A/B-proved),
-so when BENCH_QUERIES grows every budget re-freezes from a fresh
-back-to-back idle pair, as the per-key MEDIAN (= mean of the pair).
+Budgets describe bench.py's own measurement context: the box, the
+scale factor, the materialization and the key list (growing the list
+moves hot existing keys through JIT code-cache pressure). So every
+budget re-freezes together from one back-to-back pair of idle runs,
+as the per-key mean of the pair, under the pair's (sf, cpus,
+materialize) key. A pair whose keys or key sets differ is refused.
 
 Usage: python tools/refreeze_budgets.py runA.json runB.json "note text"
-Writes BENCH_BUDGET.json in place, preserving tolerance/abs_margin and
-appending the note with per-run provenance (loadavg, steal, medians).
-Keys whose pair spread exceeds 1.5x are listed on stderr for manual
-adjudication before committing.
+Writes BENCH_BUDGET.json in place, keeping tolerance and abs_margin_s,
+and replaces its provenance with the two runs'. Keys whose pair spread
+exceeds 1.5x are listed on stderr for adjudication before committing.
 """
 
 from __future__ import annotations
@@ -21,6 +21,7 @@ import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+KEY = ("sf", "cpus", "materialize")
 
 
 def last_json(p: str) -> dict:
@@ -31,46 +32,47 @@ def main() -> int:
     a, b = last_json(sys.argv[1]), last_json(sys.argv[2])
     note = sys.argv[3] if len(sys.argv) > 3 else ""
     bud_p = REPO / "BENCH_BUDGET.json"
-    bud = json.loads(bud_p.read_text())
+    old = json.loads(bud_p.read_text())
     qa, qb = a["queries"], b["queries"]
-    assert set(qa) == set(qb), "run key sets differ"
-    # ADVICE r12: a pair of runs from the wrong SF would silently
-    # re-freeze every budget in the wrong measurement context, and
-    # silently-dropped budget keys would stop gating.
-    assert a["sf"] == b["sf"], f"run SFs differ: {a['sf']} vs {b['sf']}"
-    dropped = sorted(set(bud.get("queries") or {}) - set(qa))
+    ka, kb = ({k: r.get(k) for k in KEY} for r in (a, b))
+    if ka != kb or None in ka.values():
+        print(f"!! run keys differ or are incomplete: {ka} vs {kb}",
+              file=sys.stderr)
+        return 2
+    if set(qa) != set(qb):
+        print("!! run key sets differ", file=sys.stderr)
+        return 2
+    dropped = sorted(set(old.get("queries") or {}) - set(qa))
     if dropped:
         print(f"!! {len(dropped)} budget keys absent from the runs "
               f"(will be DROPPED): {', '.join(dropped)}", file=sys.stderr)
-    new_q = {k: round((qa[k] + qb[k]) / 2, 3) for k in qa}
-    spread = {
-        k: round(max(qa[k], qb[k]) / max(min(qa[k], qb[k]), 1e-9), 2)
-        for k in qa
+    spread = {k: max(qa[k], qb[k]) / max(min(qa[k], qb[k]), 1e-9) for k in qa}
+    for k, s in sorted(spread.items(), key=lambda kv: -kv[1]):
+        if s > 1.5:
+            print(f"!! pair spread {s:.2f}x on {k}: {qa[k]} / {qb[k]}",
+                  file=sys.stderr)
+    bud = {
+        "_comment": "Per-query time budgets (sec) for bench.py, valid "
+        "only for runs under the same (sf, cpus, materialize) key; "
+        "each is the mean of the two runs in provenance. A key violates "
+        "when it exceeds both tolerance x budget and budget + "
+        "abs_margin_s.",
+        **ka,
+        "estimator": a["estimator"],
+        "runs": a["runs"],
+        "tolerance": old.get("tolerance", 1.25),
+        "abs_margin_s": old.get("abs_margin_s", 0.15),
+        "queries": {k: round((qa[k] + qb[k]) / 2, 3) for k in sorted(qa)},
+        "inputs": a.get("inputs"),
+        "provenance": {
+            "note": note,
+            "runs": [{k: r.get(k) for k in (
+                "value", "loadavg_1m", "n_pids", "cpu_steal_pct",
+                "budget_median_ratio", "budget_mismatch")} for r in (a, b)],
+        },
     }
-    wide = {k: s for k, s in spread.items() if s > 1.5}
-    if wide:
-        print(f"!! pair spread > 1.5x on {len(wide)} keys (adjudicate):",
-              file=sys.stderr)
-        for k, s in sorted(wide.items(), key=lambda kv: -kv[1]):
-            print(f"   {k}: {qa[k]} / {qb[k]} ({s}x)", file=sys.stderr)
-    bud["queries"] = dict(sorted(new_q.items(), key=lambda kv: kv[0]))
-    bud["sf"] = a["sf"]
-    bud["inputs"] = a.get("inputs", bud.get("inputs"))
-    prov = {
-        "runs": [
-            {
-                "total": r["value"],
-                "loadavg_1m": r.get("loadavg_1m"),
-                "cpu_steal_pct": r.get("cpu_steal_pct"),
-                "budget_median_ratio": r.get("budget_median_ratio"),
-            }
-            for r in (a, b)
-        ],
-        "note": note,
-    }
-    bud["note_r13_refreeze"] = prov
-    bud_p.write_text(json.dumps(bud, indent=1))
-    print(f"re-froze {len(new_q)} budgets; totals "
+    bud_p.write_text(json.dumps(bud, indent=1) + "\n")
+    print(f"re-froze {len(qa)} budgets under {ka}; totals "
           f"{a['value']} / {b['value']}")
     return 0
 
