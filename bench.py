@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Headline benchmark: times every key in ``measure.BENCH_QUERIES`` at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+$SPARK_GRAFT_SF_DIR (default ``SF_DIR``, the sf0.1 test data) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric": ...,
 "value": total_sec, "unit": "sec", "queries": {name: sec}, ...}.
 

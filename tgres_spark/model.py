@@ -21,6 +21,8 @@ or timestamp-precision handling.
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,8 +42,6 @@ def workdir(spark: SparkSession, prefix: str) -> str:
     that dir with ``Utils.createTempDir``, so its shutdown hook deletes
     it, and everything in it, when the JVM exits. The returned frames
     read these files lazily, so nothing may delete them earlier."""
-    import tempfile
-
     return tempfile.mkdtemp(prefix=prefix, dir=spark.sparkContext._temp_dir)
 
 

@@ -71,9 +71,10 @@ def duck_connect(sf_dir: str):
 
 def duck_rows(con, sql: str):
     """(columns, rows) of the oracle. Fetched via pandas, NOT
-    fetchall(): the driver's gate goes through pandas/arrow, where
-    HUGEINT and nullable-int columns surface as float64. fetchall()
-    hides that class of mismatch (returns HUGEINT as Python int)."""
+    fetchall(): through pandas/arrow, HUGEINT and nullable-int columns
+    surface as float64, as they do for any arrow consumer of the
+    oracle. fetchall() hides that class of mismatch (returns HUGEINT
+    as Python int)."""
     ddf = con.execute(sql).df()
     dcols = list(ddf.columns)
     return dcols, list(zip(*[ddf[c].tolist() for c in dcols], strict=True))
