@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 
+from tgres_spark.archive import ArchiveSet
 from tgres_spark.dsl.evaluator import DslContext, evaluate
 from tgres_spark.dsl.parser import Call, Literal, Pattern, glob_to_regex, parse
 
@@ -240,8 +241,7 @@ def test_moving_window_accepts_duration_strings(spark):
 
     rows = [("m.a", t, float(t)) for t in range(60, 660, 60)]
     cat = spark.createDataFrame(rows, "name string, t long, value double")
-    ctx = DslContext(cat)
-    ctx.step = 60  # the series' RRA step; duration/step = points
+    ctx = DslContext(ArchiveSet(cat, base_step=60))  # duration/step = points
     by_str = evaluate(ctx, "movingAverage(m.a, '5min')").collect()
     by_pts = evaluate(ctx, "movingAverage(m.a, 5)").collect()
     assert sorted((r["t"], r["value"]) for r in by_str) == sorted(

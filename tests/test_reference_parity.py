@@ -12,6 +12,7 @@ import math
 
 import pytest
 
+from tgres_spark.archive import ArchiveSet
 from tgres_spark.dsl.evaluator import DslContext, evaluate
 
 STEP = 60
@@ -207,8 +208,7 @@ def test_summarize_of_summed_constant_lines(spark):
     cat = spark.createDataFrame(
         [("unused", 0, 0.0)], "name string, t long, value double"
     )
-    ctx = DslContext(cat, t_from=0, t_to=3600)
-    ctx.step = 1
+    ctx = DslContext(ArchiveSet(cat, base_step=1), t_from=0, t_to=3600)
     out = evaluate(
         ctx,
         "summarize(sumSeries(constantLine(10), constantLine(20), constantLine(30)), '1min', 'sum')",
@@ -229,8 +229,7 @@ def test_divide_series_single_group_form(spark):
     cat = spark.createDataFrame(
         [("unused", 0, 0.0)], "name string, t long, value double"
     )
-    ctx = DslContext(cat, t_from=0, t_to=600)
-    ctx.step = 60
+    ctx = DslContext(ArchiveSet(cat, base_step=60), t_from=0, t_to=600)
     out = evaluate(
         ctx, "divideSeries(group(constantLine(10), constantLine(20)))"
     ).collect()
@@ -250,8 +249,7 @@ def test_hitcount_of_summed_constant_lines(spark):
     cat = spark.createDataFrame(
         [("unused", 0, 0.0)], "name string, t long, value double"
     )
-    ctx = DslContext(cat, t_from=0, t_to=3600)
-    ctx.step = 1
+    ctx = DslContext(ArchiveSet(cat, base_step=1), t_from=0, t_to=3600)
     out = evaluate(
         ctx,
         "hitcount(sumSeries(constantLine(10), constantLine(20), constantLine(30)), '1min')",
@@ -273,8 +271,7 @@ def test_n_percentile_of_constant_and_sinusoid(spark):
     # one full period of our sinusoid (sin(t/3600), period 2π·3600)
     # so the median sits near zero like the reference's full-cycle
     # sinusoid (its exact 6.12e-17 is an artifact of its point grid)
-    ctx = DslContext(cat, t_from=0, t_to=22619)
-    ctx.step = 60
+    ctx = DslContext(ArchiveSet(cat, base_step=60), t_from=0, t_to=22619)
     out = evaluate(ctx, "nPercentile(group(constantLine(10), sinusoid()), 50)").collect()
     by_name = {}
     for r in out:
@@ -291,9 +288,7 @@ def _gen_ctx(spark, t_to=22619, step=360):
     )
     from tgres_spark.dsl.evaluator import DslContext
 
-    ctx = DslContext(cat, t_from=0, t_to=t_to)
-    ctx.step = step
-    return ctx
+    return DslContext(ArchiveSet(cat, base_step=step), t_from=0, t_to=t_to)
 
 
 def test_changed_of_sinusoid_is_one(spark):
@@ -479,7 +474,7 @@ def test_scale_to_seconds_linearity(td):
 # (avg → still 10), consolidateBy re-consolidates at the context step
 # (3600) → one slot summing ten tens = 100; max stays 10.
 def test_consolidate_by_sums_slot_contents(spark, td):
-    ctx = DslContext(td.catalog, t_from=0, t_to=3600, max_points=10)
+    ctx = DslContext(td.archives, t_from=0, t_to=3600, max_points=10)
     every_value_is(evaluate(ctx, "consolidateBy(foo.bar1.baz, sum)"), 100.0)
     every_value_is(evaluate(ctx, "consolidateBy(foo.bar1.baz, max)"), 10.0)
 

@@ -330,6 +330,44 @@ def test_http_500_body_is_json_when_message_has_quotes(catalog):
         server.shutdown()
 
 
+@pytest.mark.parametrize(
+    "method, path, length",
+    [
+        ("GET", "/render?target=web.h1.hits&maxDataPoints=abc", None),
+        ("GET", "/pixel/app.signup?t=noon", None),
+        ("POST", "/pixel/add", "abc"),
+        # rfile.read(-1) would block the single-threaded server
+        ("POST", "/pixel/add", "-1"),
+    ],
+    ids=["maxDataPoints", "pixel_t", "content_length_text", "content_length_negative"],
+)
+def test_http_malformed_argument_answers_400(catalog, method, path, length):
+    """A malformed integer argument answers 400 with a JSON error, the
+    request queues nothing, and the server keeps serving."""
+    from http.client import HTTPConnection
+
+    from tgres_spark.http_api import serve
+
+    server = serve(catalog, now=300)
+    conn = HTTPConnection(*server.server_address, timeout=30)
+    try:
+        conn.putrequest(method, path)
+        if length is not None:
+            conn.putheader("Content-Length", length)
+        conn.endheaders(b"x=1" if method == "POST" else None)
+        r = conn.getresponse()
+        assert r.status == 400
+        assert "must" in json.loads(r.read())["error"]
+        conn.close()
+        assert server.pixel_hits == [] and server.agg_commands == []
+        conn = HTTPConnection(*server.server_address, timeout=30)
+        conn.request("GET", "/ping")
+        assert conn.getresponse().status == 200
+    finally:
+        conn.close()  # EOF frees a handler stuck reading the body
+        server.shutdown()
+
+
 def test_as_percent_over_unprojected_partitioned_archive(spark, tmp_path):
     """A partitioned archive frame carries ``day`` and ``bucket`` beside
     ``name, t, value``; the DSL fetch must project them away so a

@@ -1,10 +1,13 @@
-"""RRA archive catalog + bestRRA request routing.
+"""RRA archive catalog, BestRRA request routing, and the one DSL read
+context.
 
 Reference: rrd/ds.go:134-197 BestRRA — a DS holds several RRAs
 (cf/step/span); a render request (start, end, maxDataPoints) is served
 from the RRA whose span covers the start and whose step is closest to
 the span/points resolution the client asked for (no points → the
-finest step). dsl/ds_lru.go:271 routes every DSL fetch through it.
+finest step). dsl/ds_lru.go:271 routes every DSL fetch through it, and
+so does ``DslContext.fetch`` here: a flat SeriesFrame is read as a
+one-archive set.
 
 Spark-first: archives are *materializations* of ``consolidate()``
 written as parquet with the SCALE.md layout (partitioned by day/name
@@ -18,15 +21,20 @@ shuffle happens once at write time, not per render.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .model import NAME, T
-from .operators.consolidate import consolidate
-from .dsl.evaluator import DslContext
 from .dsl.parser import glob_to_regex
+from .dsl.timespec import parse_time
+from .model import NAME, T, VALUE
+from .operators.consolidate import consolidate
+
+# Step a flat SeriesFrame is read at: the 1h archive step the query
+# suite's catalogs use.
+_FRAME_STEP = 3600
 
 
 @dataclass
@@ -107,6 +115,51 @@ class ArchiveSet:
         return min(cands, key=lambda a: a.step)
 
 
+# --- the partitioned layout (docs/SCALE.md) --------------------------------
+
+def _with_partitions(df: DataFrame, n_buckets: int) -> DataFrame:
+    """Add the partition columns: ``day`` is the epoch day as an
+    INTEGER, never a calendar string (from_unixtime renders through
+    the session timezone, so the same table written from two sessions
+    would shear its partitions); ``bucket`` is the name's hash bucket."""
+    return df.withColumn(
+        "day", F.expr(f"CAST(`{T}` DIV 86400 AS BIGINT)")
+    ).withColumn("bucket", F.pmod(F.xxhash64(F.col(NAME)), n_buckets))
+
+
+def _prune_partitions(df: DataFrame, pattern: str, n_buckets: int,
+                      t_from: int | None, t_to: int | None) -> DataFrame:
+    """Partition-level pruning BEFORE any row filter: the time range
+    maps to a day-directory range, and an exact (no glob metachars)
+    name folds to one bucket — xxhash64 of a literal constant-folds,
+    so both predicates prune at the file listing, not per row."""
+    if t_from is not None:
+        df = df.where(F.col("day") >= t_from // 86400)
+    if t_to is not None:
+        df = df.where(F.col("day") <= t_to // 86400)
+    if not any(c in pattern for c in "*?{}[]"):
+        df = df.where(
+            F.col("bucket") == F.pmod(F.xxhash64(F.lit(pattern)), n_buckets)
+        )
+    return df
+
+
+@contextmanager
+def _dynamic_overwrite(spark: SparkSession):
+    """Within the block an overwrite replaces only the partitions it
+    writes; the session's previous mode comes back on exit."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "dynamic")
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
 def materialize_archives(
     spark: SparkSession,
     sf: DataFrame,
@@ -135,17 +188,7 @@ def materialize_archives(
         rolled = consolidate(sf, step, cf=cf, heartbeat=heartbeat)
         if partitioned:
             (
-                rolled.withColumn(
-                    # epoch-day INTEGER, never a calendar string:
-                    # from_unixtime renders through the session
-                    # timezone, so the same table written from two
-                    # sessions would shear its partitions (the repo
-                    # rule is epoch bigints end-to-end)
-                    "day", F.expr(f"CAST(`{T}` DIV 86400 AS BIGINT)")
-                )
-                .withColumn(
-                    "bucket", F.pmod(F.xxhash64(F.col(NAME)), n_buckets)
-                )
+                _with_partitions(rolled, n_buckets)
                 .write.mode("overwrite")
                 .partitionBy("day", "bucket")
                 .parquet(path)
@@ -188,31 +231,16 @@ def refresh_archives(
     tests/test_archive.py).
     Only meaningful for archives written with ``partitioned=True``."""
     day_start = (since_t // 86400) * 86400
-    first_day = F.lit(since_t // 86400)
     sliced = sf.where(F.col(T) >= day_start - lookback_s)
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with _dynamic_overwrite(spark):
         for cf, step in specs:
             rolled = consolidate(sliced, step, cf=cf, heartbeat=heartbeat)
             (
-                rolled.withColumn(
-                    "day", F.expr(f"CAST(`{T}` DIV 86400 AS BIGINT)")
-                )
-                .where(F.col("day") >= first_day)
-                .withColumn(
-                    "bucket", F.pmod(F.xxhash64(F.col(NAME)), n_buckets)
-                )
+                _with_partitions(rolled, n_buckets)
+                .where(F.col("day") >= since_t // 86400)
                 .write.mode("overwrite")
                 .partitionBy("day", "bucket")
                 .parquet(f"{root}/{cf}_{step}")
-            )
-    finally:
-        if prev_mode is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
             )
 
 
@@ -321,23 +349,16 @@ def compact_archive(
     if not frag:
         return {"path": path, "compacted": {}, "n_partitions": 0}
     df = spark.read.option("basePath", path).parquet(*frag)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with _dynamic_overwrite(spark):
+        # one task per fragmented partition → max_files=1 output
+        # files; hash collisions only co-locate partitions in a task,
+        # never split one across tasks
         (
-            # one task per fragmented partition → max_files=1 output
-            # files; hash collisions only co-locate partitions in a
-            # task, never split one across tasks
             df.repartition(len(frag), F.col("day"), F.col("bucket"))
             .write.mode("overwrite")
             .partitionBy("day", "bucket")
             .parquet(path)
         )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return {
         "path": path,
         "compacted": files_before,
@@ -345,43 +366,74 @@ def compact_archive(
     }
 
 
-class ArchiveDslContext(DslContext):
-    """DslContext that serves fetches from the best archive instead of
-    downsampling raw on the fly (dsl/ds_lru.go:271 → BestRRA). The
-    chosen archive's data is returned at its native step — maxDataPoints
-    selects the archive, it does not re-consolidate (reference
-    behavior: the RRA's DPs are the render payload)."""
+class DslContext:
+    """The Graphite read context (dsl.ParseDsl(db, src, from, to,
+    maxPoints), dsl/dsl.go:69). ``source`` is an ArchiveSet or a flat
+    SeriesFrame; a frame is read as a one-archive set at _FRAME_STEP.
+    ``t_from``/``t_to`` accept epoch ints OR graphite time strings
+    ('-1h', '-7d', 'now', '1704067200' — the reference's parseTime,
+    http/graphite.go:197-218); relative forms anchor to ``now`` (epoch
+    seconds; wall clock when omitted — pass it explicitly for
+    deterministic replays)."""
 
-    def __init__(self, archives: ArchiveSet, t_from=None, t_to=None,
-                 max_points: int | None = None, now: int | None = None):
-        super().__init__(archives.base, t_from=t_from, t_to=t_to,
-                         max_points=None, now=now)
-        self.archive_set = archives
-        self.requested_points = max_points
+    def __init__(
+        self,
+        source: ArchiveSet | DataFrame,
+        t_from: int | str | None = None,
+        t_to: int | str | None = None,
+        max_points: int | None = None,
+        now: int | None = None,
+    ):
+        if not isinstance(source, ArchiveSet):
+            source = ArchiveSet(source, base_step=_FRAME_STEP)
+        self.archives = source
+        self.spark = source.base.sparkSession
+        self.now = now
+        self.t_from = parse_time(t_from, now)
+        self.t_to = parse_time(t_to, now)
+        self.max_points = max_points
         self.last_selected: Archive | None = None
 
+    def _route(self) -> Archive:
+        return self.archives.best(self.t_from, self.t_to, self.max_points)
+
+    @property
+    def step(self) -> int:
+        """Step of the archive this context's fetches read: the series
+        step of scaleToSeconds, hitcount, consolidateBy, duration
+        windows and the generators."""
+        return self._route().step
+
     def fetch(self, pattern: str) -> DataFrame:
-        a = self.archive_set.best(self.t_from, self.t_to, self.requested_points)
-        self.last_selected = a
+        """One pattern's series: BestRRA picks the archive (recorded in
+        ``last_selected``), a partitioned archive prunes day/bucket
+        directories, then the name and time filters. Only a set with
+        nothing to route to (one archive) re-consolidates to
+        maxDataPoints; a routed archive's data is returned at its
+        native step — the RRA's DPs are the render payload."""
+        a = self.last_selected = self._route()
         df = a.df
         if a.buckets:
-            # Partition-level pruning BEFORE any row filter: the time
-            # range maps to a day-directory range, and an exact (no
-            # glob metachars) name folds to one bucket — xxhash64 of
-            # a literal constant-folds, so both predicates prune at
-            # the file listing, not per row.
-            if self.t_from is not None:
-                df = df.where(F.col("day") >= self.t_from // 86400)
-            if self.t_to is not None:
-                df = df.where(F.col("day") <= self.t_to // 86400)
-            if not any(c in pattern for c in "*?{}[]"):
-                df = df.where(
-                    F.col("bucket")
-                    == F.pmod(F.xxhash64(F.lit(pattern)), a.buckets)
-                )
+            df = _prune_partitions(df, pattern, a.buckets, self.t_from, self.t_to)
         df = df.where(F.col(NAME).rlike(glob_to_regex(pattern)))
         if self.t_from is not None:
             df = df.where(F.col(T) >= self.t_from)
         if self.t_to is not None:
             df = df.where(F.col(T) <= self.t_to)
-        return df.select(NAME, T, "value")
+        if (
+            self.max_points and self.t_from is not None
+            and self.t_to is not None and len(self.archives.archives) == 1
+        ):
+            # time-bucket approximation of the reference's positional
+            # dense-slot walk (rra_series.go Next): identical when the
+            # span divides evenly. The faithful positional form — moves
+            # = round(groupBy/step) slots over the dense grid, partial
+            # tail dropped — is operators/align.maxpoints_group, used
+            # when the source step is known (dsl_maxDataPoints query).
+            step = max(1, (self.t_to - self.t_from) // self.max_points)
+            df = consolidate(df, int(step), cf="avg")
+        return df.select(NAME, T, VALUE)
+
+
+# the name perfbench/render_wl.py reads routed archives through
+ArchiveDslContext = DslContext

@@ -1,10 +1,12 @@
-"""Evaluate a parsed Graphite target against a SeriesFrame catalog.
+"""Evaluate a parsed Graphite target against a DslContext.
 
 Mirrors dsl.ParseDsl(db, src, from, to, maxPoints) (dsl/dsl.go:69):
-patterns glob-match the catalog, calls dispatch to the operator
-library, the time range prunes t, and maxPoints consolidates down.
+patterns glob-match the context's archives, calls dispatch to the
+operator library, the time range prunes t, and maxPoints routes or
+consolidates. The context (archive.DslContext, re-exported here) is
+the only place data is read: every series comes from its ``fetch``.
 
-The catalog is ONE long SeriesFrame — a pattern is a filter (rlike on
+A catalog is ONE long SeriesFrame — a pattern is a filter (rlike on
 the partition-pruning name column), not a per-series fetch loop. A
 thousand-series glob costs one predicate, and Catalyst pushes it into
 the parquet scan.
@@ -13,59 +15,15 @@ the parquet scan.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..model import NAME, T, VALUE
+from ..archive import DslContext
 from ..operators import dsl_calculate as dc
 from ..operators import dsl_combine as db
 from ..operators import dsl_filter as df_
 from ..operators import dsl_special as ds
 from ..operators import dsl_transform as dt
 from ..operators.consolidate import consolidate
-from .parser import Call, Literal, Pattern, glob_to_regex, parse
-
-
-class DslContext:
-    """Evaluation context. ``t_from``/``t_to`` accept epoch ints OR
-    graphite time strings ('-1h', '-7d', 'now', '1704067200' — the
-    reference's parseTime, http/graphite.go:197-218); relative forms
-    anchor to ``now`` (epoch seconds; wall clock when omitted — pass
-    it explicitly for deterministic replays)."""
-
-    def __init__(
-        self,
-        catalog: DataFrame,
-        t_from: int | str | None = None,
-        t_to: int | str | None = None,
-        max_points: int | None = None,
-        now: int | None = None,
-    ):
-        from .timespec import parse_time
-
-        self.catalog = catalog
-        self.now = now
-        self.t_from = parse_time(t_from, now)
-        self.t_to = parse_time(t_to, now)
-        self.max_points = max_points
-
-    def fetch(self, pattern: str) -> DataFrame:
-        df = self.catalog.where(F.col(NAME).rlike(glob_to_regex(pattern)))
-        if self.t_from is not None:
-            df = df.where(F.col(T) >= self.t_from)
-        if self.t_to is not None:
-            df = df.where(F.col(T) <= self.t_to)
-        if self.max_points and self.t_from is not None and self.t_to is not None:
-            # time-bucket approximation of the reference's positional
-            # dense-slot walk (rra_series.go Next): identical when the
-            # span divides evenly. The faithful positional form — moves
-            # = round(groupBy/step) slots over the dense grid, partial
-            # tail dropped — is operators/align.maxpoints_group, used
-            # when the source step is known (dsl_maxDataPoints query);
-            # a fetch here sees an arbitrary-step catalog frame.
-            span = self.t_to - self.t_from
-            step = max(1, span // self.max_points)
-            df = consolidate(df, int(step), cf="avg")
-        return df.select(NAME, T, VALUE)
+from .parser import Call, Literal, Pattern, parse
 
 
 def _series(ctx, node):
@@ -112,7 +70,7 @@ def _seconds(node) -> int:
         return sign * int(float(s))
 
 
-def _moving_points(node, ctx=None) -> int:
+def _moving_points(node, ctx) -> int:
     """moving* windowSize: a bare number is a point count; a duration
     string ('5min', '1h') converts via duration/step like the
     reference's BetterParseDuration branch (dslMovingAverage,
@@ -123,8 +81,7 @@ def _moving_points(node, ctx=None) -> int:
     from .timespec import parse_duration
 
     dur = int(parse_duration(_str(node)))
-    step = _infer_step(ctx) if ctx is not None else 1
-    return max(1, dur // max(1, step))
+    return max(1, dur // max(1, ctx.step))
 
 
 def evaluate(ctx: DslContext, src: str) -> DataFrame:
@@ -219,7 +176,7 @@ def _dispatch(ctx: DslContext, call: Call) -> DataFrame:
     if f == "delay":
         return dt.delay(s0(), int(_num(a[1])))
     if f == "scaleToSeconds":
-        return dt.scale_to_seconds(s0(), _seconds(a[1]), _infer_step(ctx))
+        return dt.scale_to_seconds(s0(), _seconds(a[1]), ctx.step)
     if f == "summarize":
         func = _str(a[2]) if len(a) > 2 else "sum"
         return dt.summarize(s0(), _seconds(a[1]), func)
@@ -227,9 +184,9 @@ def _dispatch(ctx: DslContext, call: Call) -> DataFrame:
         func = _str(a[2]) if len(a) > 2 else "sum"
         return dt.summarize(s0(), _seconds(a[1]), func)
     if f == "hitcount":
-        return dt.hitcount(s0(), _seconds(a[1]), _infer_step(ctx))
+        return dt.hitcount(s0(), _seconds(a[1]), ctx.step)
     if f == "consolidateBy":
-        return consolidate(s0(), _infer_step(ctx), cf=_str(a[1]).lower())
+        return consolidate(s0(), ctx.step, cf=_str(a[1]).lower())
 
     if f == "movingAverage":
         return dc.moving_average(s0(), _moving_points(a[1], ctx))
@@ -350,9 +307,8 @@ def _dispatch(ctx: DslContext, call: Call) -> DataFrame:
     if f == "constantLine":
         if ctx.t_from is None or ctx.t_to is None:
             raise ValueError("constantLine needs a time range on the context")
-        step = _infer_step(ctx)
         return ds.constant_line(
-            ctx.catalog.sparkSession, _num(a[0]), ctx.t_from, ctx.t_to, step
+            ctx.spark, _num(a[0]), ctx.t_from, ctx.t_to, ctx.step
         )
     if f == "sinusoid":
         # dslSinusoid (funcs.go:1960-1980): unit sine over the request
@@ -360,31 +316,29 @@ def _dispatch(ctx: DslContext, call: Call) -> DataFrame:
         if ctx.t_from is None or ctx.t_to is None:
             raise ValueError("sinusoid needs a time range on the context")
         amp = _num(a[0], 1.0) if a else 1.0
-        return ds.sinusoid(
-            ctx.catalog.sparkSession, amp, ctx.t_from, ctx.t_to, _infer_step(ctx)
-        )
+        return ds.sinusoid(ctx.spark, amp, ctx.t_from, ctx.t_to, ctx.step)
     if f == "randomWalk":
         # beyond-reference generator (graphite-web has it); seeded by
         # slot hash so replays are deterministic (dsl_special.py).
         if ctx.t_from is None or ctx.t_to is None:
             raise ValueError("randomWalk needs a time range on the context")
         nm = _str(a[0]) if a else "randomWalk()"
-        return ds.random_walk(
-            ctx.catalog.sparkSession, nm, ctx.t_from, ctx.t_to, _infer_step(ctx)
-        )
+        return ds.random_walk(ctx.spark, nm, ctx.t_from, ctx.t_to, ctx.step)
     if f == "timeStack":
         # reference dslCtxFuncs "timeStack" (funcs.go:2327): fetch the
-        # pattern over the WIDE range [to - num·period, to] directly
-        # from the catalog (the context's from-filter must not cut the
-        # historical slices), slice per shift index i in [begin, num].
+        # pattern over the WIDE range covering every slice
+        # (t_to-(i+1)·period, t_to-i·period], i in [begin, num] — the
+        # context's from-filter must not cut the historical slices —
+        # through the same routed fetch, at native resolution.
         if ctx.t_to is None:
             raise ValueError("timeStack needs `to` on the context")
         pat = a[0].text if isinstance(a[0], Pattern) else _str(a[0])
         period = _seconds(a[1])
         begin, num = int(_num(a[2])), int(_num(a[3]))
-        wide = ctx.catalog.where(F.col(NAME).rlike(glob_to_regex(pat)))
+        ends = [ctx.t_to - k * period for k in (begin, begin + 1, num, num + 1)]
+        wide = DslContext(ctx.archives, min(ends), max(ends), now=ctx.now)
         ispec = a[1].value if isinstance(a[1], Literal) else str(period)
-        return dt.time_stack(wide, period, begin, num, ctx.t_to, ispec)
+        return dt.time_stack(wide.fetch(pat), period, begin, num, ctx.t_to, ispec)
 
     from ..operators import holtwinters as hw
 
@@ -396,10 +350,3 @@ def _dispatch(ctx: DslContext, call: Call) -> DataFrame:
         return hw.holt_winters_aberration(s0(), int(_num(a[1], 24.0)) if len(a) > 1 else 24)
 
     raise ValueError(f"unknown DSL function: {f}")
-
-
-def _infer_step(ctx: DslContext) -> int:
-    """Series step for functions that need it (scaleToSeconds,
-    hitcount, consolidateBy): contexts carry RRA-stepped data; default
-    1h, the archive step used throughout the query suite."""
-    return getattr(ctx, "step", 3600)

@@ -4,10 +4,17 @@ Reference: http/graphite.go — `/render?target=..&from=..&until=..&
 maxDataPoints=..` and `/metrics/find?query=..`. The engine proper is
 a library over a cluster (render.py builds the exact graphite-web
 JSON payloads); this wrapper is presentation only: stdlib
-http.server, no framework, no state — every byte of the response
-body comes from render_json/find_json. Suitable for tests and
-single-process serving; a production deployment would put the same
-two calls behind any WSGI/ASGI front.
+http.server, no framework — every byte of a /render or /metrics/find
+response body comes from render_json/find_json. Suitable for tests
+and single-process serving; a production deployment would put the
+same two calls behind any WSGI/ASGI front.
+
+The server does hold state: the /pixel/ routes append to
+``server.pixel_hits`` and ``server.agg_commands``, and nothing inside
+the server drains those queues — callers read them (QUEUE_CAP bounds
+them). Draining them into the ingest pipeline is ROADMAP item 3.
+Malformed request arguments (a non-integer maxDataPoints, pixel
+``?t=`` or POST Content-Length, a negative Content-Length) answer 400.
 """
 
 from __future__ import annotations
@@ -57,6 +64,20 @@ _AGG_ROUTES = {
     "/pixel/setgauge": "setgauge",
     "/pixel/append": "append",
 }
+
+
+class _BadRequest(ValueError):
+    """A malformed request argument; the handler answers 400."""
+
+
+def _int_arg(raw: str | None, what: str) -> int | None:
+    """An integer request argument, None when absent or empty."""
+    if not raw:
+        return None
+    try:
+        return int(raw)
+    except ValueError:
+        raise _BadRequest(f"{what} must be an integer, got {raw!r}") from None
 
 
 def _agg_items(cmd: str, q: dict, t: int) -> list:
@@ -125,12 +146,20 @@ def _make_handler(catalog: DataFrame, now: int | None):
             # the reference's ParseForm reads urlencoded POST bodies
             # for the pixel agg routes; everything else is GET-only
             u = urlparse(self.path)
-            if u.path in _AGG_ROUTES:
-                n = int(self.headers.get("Content-Length", 0) or 0)
-                body = self.rfile.read(n).decode("utf-8", "replace")
-                self._handle_agg(_AGG_ROUTES[u.path], parse_qs(body))
-            else:
+            if u.path not in _AGG_ROUTES:
                 self._reply(404, '{"error": "not found"}')
+                return
+            try:
+                n = _int_arg(self.headers.get("Content-Length"), "Content-Length")
+                if n is not None and n < 0:
+                    # rfile.read(-1) would wait for EOF and stall the
+                    # single-threaded server
+                    raise _BadRequest("Content-Length must not be negative")
+            except _BadRequest as e:
+                self._reply(400, json.dumps({"error": str(e)}))
+                return
+            body = self.rfile.read(n or 0).decode("utf-8", "replace")
+            self._handle_agg(_AGG_ROUTES[u.path], parse_qs(body))
 
         def do_GET(self):
             u = urlparse(self.path)
@@ -150,13 +179,14 @@ def _make_handler(catalog: DataFrame, now: int | None):
                     if not targets:
                         self._reply(400, '{"error": "target required"}')
                         return
-                    mdp = q.get("maxDataPoints", [None])[0]
                     body = render_json(
                         catalog,
                         targets,
                         t_from=q.get("from", [None])[0],
                         t_to=q.get("until", [None])[0],
-                        max_points=int(mdp) if mdp else None,
+                        max_points=_int_arg(
+                            q.get("maxDataPoints", [None])[0], "maxDataPoints"
+                        ),
                         now=now,
                     )
                     self._reply(200, body)
@@ -180,14 +210,15 @@ def _make_handler(catalog: DataFrame, now: int | None):
                     if not metric:
                         self._reply(400, '{"error": "metric required"}')
                         return
-                    t_param = q.get("t", [None])[0]
-                    t = int(t_param) if t_param else (
-                        now if now is not None else int(_time.time())
-                    )
+                    t = _int_arg(q.get("t", [None])[0], "t")
+                    if t is None:
+                        t = now if now is not None else int(_time.time())
                     if self._enqueue(self.server.pixel_hits, [(metric, t)]):
                         self._send_pixel()
                 else:
                     self._reply(404, '{"error": "not found"}')
+            except _BadRequest as e:
+                self._reply(400, json.dumps({"error": str(e)}))
             except Exception as e:  # evaluation error → 500, not a hang
                 _LOG.warning("request %s failed: %s", self.path, e)
                 self._reply(500, json.dumps({"error": str(e)}))

@@ -72,13 +72,13 @@ def rrd_archive_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BestRRA request routing (rrd/ds.go:134-197): a wide-span render
     is served from the coarsest archive satisfying maxDataPoints —
     here 30d/720pts → the 1h rollup, not 10s raw."""
-    from ..archive import ArchiveDslContext, ArchiveSet
+    from ..archive import ArchiveSet, DslContext
 
     sf = series_from_events(spark, sf_dir)
     arch = ArchiveSet(sf, base_step=10)
     for cf, step in (("wmean", 60), ("wmean", 600), ("wmean", 3600)):
         arch.add(cf, step, consolidate(sf, step, cf=cf))
-    ctx = ArchiveDslContext(arch, t_from=_T0, t_to=_T1, max_points=720)
+    ctx = DslContext(arch, t_from=_T0, t_to=_T1, max_points=720)
     out = ctx.fetch("*")
     assert ctx.last_selected is not None and ctx.last_selected.step == 3600
     return out
